@@ -84,9 +84,17 @@ def classify_frames(df: DataFrame, line_col: str = "line") -> DataFrame:
         .when(_is_info(toks), F.lit(REASON_INFO))
         .when(~_all_numeric(toks), F.lit(REASON_NON_NUMERIC))
         .when(F.size(toks) < 2, F.lit(REASON_NO_VALUES))
+        # A node id outside int range cannot be projected (P6); like the
+        # RFM2Pi bad-node check it rejects the whole frame.
+        .when(_serial_node(toks).isNull(), F.lit(REASON_NON_NUMERIC))
         .otherwise(F.lit(VALID))
     )
     return df.withColumn("toks", toks).withColumn("reject_reason", reason)
+
+
+def _serial_node(toks: Column) -> Column:
+    """P6 serial node id: int(float(tok0)), null when outside int range."""
+    return F.element_at(toks, 1).try_cast("double").try_cast("int")
 
 
 def parse_serial_frames(df: DataFrame, line_col: str = "line") -> DataFrame:
@@ -99,7 +107,7 @@ def parse_serial_frames(df: DataFrame, line_col: str = "line") -> DataFrame:
     good = cls.filter(F.col("reject_reason") == VALID)
     toks = F.col("toks")
     return (
-        good.withColumn("node", F.element_at(toks, 1).try_cast("double").cast("int"))
+        good.withColumn("node", _serial_node(toks))
         .withColumn(
             "values",
             F.transform(F.slice(toks, 2, F.size(toks) - 1), lambda t: t.try_cast("double")),

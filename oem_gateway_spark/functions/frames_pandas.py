@@ -151,13 +151,19 @@ class _TokenBatch:
         reason[short] = REASON_NO_VALUES
         undecided &= ~short
 
+        # Node id: serial int(float(tok0)), RFM2Pi an integer literal; both
+        # must fit an int (the spec's try_cast range), else non-numeric.
+        cand = np.flatnonzero(undecided)
+        node = nums[starts[cand]]
+        node_bad = (np.floor(node) > 2**31 - 1) | (np.ceil(node) < -(2**31))
+        if rfm2pi:
+            node_bad |= ~is_int[starts[cand]]
+        reason[cand[node_bad]] = REASON_NON_NUMERIC
+        undecided[cand[node_bad]] = False
+
         if rfm2pi:
             is_first = np.zeros(len(nums), dtype=bool)
             is_first[starts[lens > 0]] = True
-            bad_node = undecided & rows_with(is_first & ~is_int)
-            reason[bad_node] = REASON_NON_NUMERIC
-            undecided &= ~bad_node
-
             bad_byte_tok = ~is_first & (~is_int | (nums < 0) | (nums > 255))
             bad = undecided & rows_with(bad_byte_tok)
             reason[bad] = REASON_BYTE_RANGE

@@ -1,8 +1,4 @@
 """Delivery sinks: the reference's buffers (SURVEY §2.4) as foreachBatch
 writers with engine-managed at-least-once semantics."""
 
-from oem_gateway_spark.sinks.emoncms import (  # noqa: F401
-    EmoncmsSink,
-    encode_bulk,
-    encode_bulk_df,
-)
+from oem_gateway_spark.sinks.emoncms import EmoncmsSink, encode_bulk  # noqa: F401

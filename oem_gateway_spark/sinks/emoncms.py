@@ -8,8 +8,12 @@ Ref: oemgatewaybuffer.py :: OemGatewayEmoncmsBuffer._send_data (~l.80-115):
   - B5 on failure keep the buffer -> retry next tick (at-least-once)
   - B6 send every ~0.2 s tick
 
-Engine mapping: one ``foreachBatch`` function per sink.  Structured
-Streaming's checkpoint replays a failed micro-batch, giving the same
+Engine mapping: one ``foreachBatch`` function per sink.  The payload is
+built on the driver from the batch's rows, one collect per batch: B4 is
+one GET carrying the whole batch, so every row reaches the driver anyway.
+The ``ingest_ts`` cast to epoch seconds happens in Spark, so Δt does not
+depend on the Python process's time zone.  Structured Streaming's
+checkpoint replays a failed micro-batch, giving the same
 at-least-once contract with no hand-rolled buffer and no loss cap (the
 reference drops oldest rows beyond its buffer bound; we never drop — the
 B2 upgrade).  We send absolute epoch via ``&time=`` (same server semantics,
@@ -23,12 +27,11 @@ from __future__ import annotations
 
 import json
 import logging
-import math
 import time
 from collections.abc import Callable
 from urllib.parse import urlencode
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 log = logging.getLogger("oem_gateway_spark.sinks.emoncms")
@@ -54,67 +57,18 @@ def _redact(url: str) -> str:
 def encode_bulk(rows: list[tuple[float, int, list[float]]], send_time: float) -> str:
     """B3: [(t, node, values), ...] -> emoncms bulk JSON with Δt offsets.
 
-    Δt = int(round(t - send_time)) — non-positive for buffered rows, matching
-    the reference's relative-time encoding (~l.85).  Values that are whole
-    numbers serialize as ints (emoncms is tolerant; keeps payloads small).
+    Rows are ordered by (t, node), so the payload does not depend on how
+    the batch was partitioned.  Δt = round(t - send_time) — half-even,
+    non-positive for buffered rows, matching the reference's relative-time
+    encoding (~l.85).  Values that are whole numbers serialize as ints
+    (emoncms is tolerant; keeps payloads small), however large.
     """
-    out = []
-    for t, node, values in rows:
-        dt = int(round(t - send_time))
-        vals = [
-            int(v) if isinstance(v, float) and math.isfinite(v) and v == int(v) else v
-            for v in values
-        ]
-        out.append([dt, int(node)] + vals)
+    out = [
+        [round(t - send_time), int(node)]
+        + [int(v) if isinstance(v, float) and v.is_integer() else v for v in values]
+        for t, node, values in sorted(rows, key=lambda r: (r[0], r[1]))
+    ]
     return json.dumps(out, separators=(",", ":"))
-
-
-def _json_num(v: Column) -> Column:
-    """JSON rendering of one reading: whole finite values print as ints
-    (NaN/inf fall through to Spark's double rendering, matching
-    json.dumps's non-strict NaN output)."""
-    return F.when(
-        v.cast("long").cast("double") == v, v.cast("long").cast("string")
-    ).otherwise(v.cast("string"))
-
-
-def encode_bulk_df(df: DataFrame, send_time: float) -> str:
-    """B3 encode, executor-side: the per-row work (Δt offsets, whole-value
-    int collapse, JSON assembly) runs as JVM column expressions; only the
-    final payload STRING crosses to the driver — one bounded string per
-    micro-batch, because B4 is by contract a single bulk POST with one
-    'ok' ack.  (The row-level twin :func:`encode_bulk` stays as the
-    reference encoder for tests/suite oracles.)
-
-    Rows are ordered by (ingest_ts, node) so the payload is deterministic
-    regardless of partitioning; Δt uses half-even rounding like Python's
-    ``int(round(...))``.
-    """
-    row = F.concat(
-        F.lit("["),
-        F.bround(F.col("ingest_ts").cast("double") - F.lit(float(send_time)), 0)
-        .cast("long")
-        .cast("string"),
-        F.lit(","),
-        F.col("node").cast("long").cast("string"),
-        F.when(
-            F.size("values") > 0,
-            F.concat(
-                F.lit(","), F.concat_ws(",", F.transform(F.col("values"), _json_num))
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("]"),
-    )
-    enc = df.select(
-        F.struct(F.col("ingest_ts"), F.col("node"), row.alias("enc")).alias("s")
-    )
-    agg = enc.agg(
-        F.concat_ws(
-            ",",
-            F.transform(F.array_sort(F.collect_list("s")), lambda s: s["enc"]),
-        ).alias("rows")
-    )
-    return "[" + agg.first()["rows"] + "]"
 
 
 class EmoncmsSink:
@@ -165,10 +119,13 @@ class EmoncmsSink:
         """
         if not self.active:  # P8 gate
             return
-        send_time = self.clock()
-        payload = encode_bulk_df(df, send_time)
-        if payload == "[]":
+        rows = df.select(
+            F.col("ingest_ts").cast("double"), "node", "values"
+        ).collect()
+        if not rows:
             return
+        send_time = self.clock()
+        payload = encode_bulk(rows, send_time)
         url = self.build_url(payload, send_time)
         last_err: Exception | None = None
         for attempt in range(self.max_attempts):

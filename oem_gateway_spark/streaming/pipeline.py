@@ -3,9 +3,11 @@
 The reference's dataflow (SURVEY §3.2) as Structured Streaming:
 
   C1 main loop      -> StreamingQueryManager + trigger(processingTime=200ms)
-  R1 fan-out        -> each sink is its own query over the shared source
-                       union (checkpointed independently, like each buffer
-                       kept its own in-memory list)
+  R1 fan-out        -> each sink is its own query over the source union
+                       (checkpointed independently, like each buffer kept
+                       its own in-memory list).  Each query opens its own
+                       listener connection, so a socket listener gets one
+                       TCP connection per query.
   P1-P6 parse chain -> functions/frames.py transforms (codegen, no UDF)
   P7 timestamping   -> ingest_ts at the source (socket includeTimestamp /
                        current_timestamp)
@@ -18,6 +20,12 @@ The reference's dataflow (SURVEY §3.2) as Structured Streaming:
 
 Scale: one query per sink keeps failure domains independent (a slow sink
 never backpressures another — the reference shared one thread for all).
+One query feeding every sink from one ``foreachBatch`` was measured on the
+benchmark's ``gateway_live`` workload (4 cores) and is slower:
+``queries_per_s`` 1.27-1.32 against 2.41 for per-sink queries.  Several
+actions on one ``foreachBatch`` frame each re-read the source
+(``numInputRows`` 200 for 100 rows), and persisting the frame to avoid
+that raised p50 ack latency to 1,321 ms.
 The parse chain is stateless map work; only windowed/stateful downstream
 ops (streaming/state.py) keep state, bounded by watermarks.
 """
@@ -60,6 +68,7 @@ class GatewayPipeline:
         self.parquet_sink_dir = parquet_sink_dir
         self.queries: list[StreamingQuery] = []
         self.sinks: dict[str, EmoncmsSink] = {}
+        self.trigger_available_now = False  # recorded by start()
 
     # ---------------------------------------------------------------- build
 
@@ -91,6 +100,7 @@ class GatewayPipeline:
     # ------------------------------------------------------------------ run
 
     def start(self, trigger_available_now: bool = False) -> list[StreamingQuery]:
+        self.trigger_available_now = trigger_available_now
         source = self.source_stream()
         parsed = self.parsed(source)
         rejects = self.rejected(source)
@@ -151,16 +161,23 @@ class GatewayPipeline:
         return self.queries
 
     def await_all(self, timeout_s: float | None = None) -> None:
-        for q in self.queries:
-            q.awaitTermination(timeout_s)
+        """Wait for every query to terminate (each gets ``timeout_s``).
+
+        Raises ``TimeoutError`` naming every query still active when its
+        wait ran out; a failed query raises its own exception.
+        """
+        active = [
+            q.name for q in self.queries if q.awaitTermination(timeout_s) is False
+        ]
+        if active:
+            raise TimeoutError(
+                f"queries still active after {timeout_s} s: {', '.join(active)}"
+            )
 
     def stop(self) -> None:
         """C5 graceful shutdown: stop every query (offsets checkpointed)."""
         for q in self.queries:
-            try:
-                q.stop()
-            except Exception:  # noqa: BLE001
-                pass
+            q.stop()
         self.queries.clear()
 
 
@@ -173,9 +190,13 @@ def restart_from_config(
 ) -> GatewayPipeline:
     """C2 hot-apply: stop the old pipeline, start one with the new config.
     Checkpointed offsets make this equivalent to the reference's in-place
-    reconfiguration (no rows lost, no rows reread)."""
+    reconfiguration (no rows lost, no rows reread).  The fresh pipeline
+    runs on the old one's trigger, so a bounded (``availableNow``) pipeline
+    stays bounded; with no old pipeline it runs on the live trigger."""
+    available_now = False
     if pipeline is not None:
         pipeline.stop()
+        available_now = pipeline.trigger_available_now
     fresh = GatewayPipeline(spark, new_config, checkpoint_root, **kwargs)
-    fresh.start()
+    fresh.start(trigger_available_now=available_now)
     return fresh

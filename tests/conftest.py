@@ -27,6 +27,20 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def no_active_streams(request):
+    """Every test leaves no streaming query running.  Leftovers are
+    stopped before the assertion, so one leak does not fail later tests."""
+    yield
+    if "spark" not in request.fixturenames:
+        return
+    active = request.getfixturevalue("spark").streams.active
+    names = [q.name for q in active]
+    for q in active:
+        q.stop()
+    assert names == [], f"streaming queries left running: {names}"
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -121,7 +121,7 @@ def test_observe_metrics_and_listener(spark, scratch):
 
 def test_apply_in_pandas_with_state_running_stats(spark, scratch):
     """Custom stateful op: per-node running counters across micro-batches
-    (applyInPandasWithState, update mode, processing-time timeout)."""
+    (applyInPandasWithState, update mode)."""
     from pyspark.sql import functions as F
 
     from oem_gateway_spark.streaming.state import node_running_stats
@@ -139,7 +139,9 @@ def test_apply_in_pandas_with_state_running_stats(spark, scratch):
         F.split("value", ",")[1].cast("double").alias("value"),
         F.current_timestamp().alias("ingest_ts"),
     )
-    stats = node_running_stats(parsed)
+    # NoTimeout: a processing-time timeout keeps availableNow scheduling
+    # no-data batches, so the query would never terminate.
+    stats = node_running_stats(parsed, timeout_minutes=None)
     q = (
         stats.writeStream.format("memory")
         .queryName("state_test")
@@ -148,7 +150,10 @@ def test_apply_in_pandas_with_state_running_stats(spark, scratch):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180), "availableNow query did not terminate"
+    finally:
+        q.stop()
     rows = spark.table("state_test").collect()
     # final (latest) emission per node reflects the running totals
     latest = {}

@@ -37,6 +37,23 @@ def test_serial_parse_and_reject_classes(spark):
     }
 
 
+def test_serial_node_out_of_int_range_is_dead_lettered(spark):
+    """A node id beyond int range cannot be projected: the frame is
+    rejected as non-numeric instead of failing the parse, and the other
+    rows still parse."""
+    lines = [
+        "99999999999 1 2",      # node > int max
+        "-2147483649 1",        # node < int min
+        "2147483647.5 3",       # truncates to int max: valid
+        "10 1 2",
+    ]
+    df = _lines_df(spark, lines)
+    parsed = {r["line_id"]: r["node"] for r in FR.parse_serial_frames(df).collect()}
+    assert parsed == {2: 2147483647, 3: 10}
+    dead = {r["line_id"]: r["reject_reason"] for r in FR.dead_letter(df).collect()}
+    assert dead == {0: FR.REASON_NON_NUMERIC, 1: FR.REASON_NON_NUMERIC}
+
+
 def test_rfm2pi_int16_decode_boundaries(spark):
     # byte pairs (lo hi): 0 128 -> -32768; 255 255 -> -1; 0 0 -> 0;
     # 255 127 -> 32767  (ref decode ~l.160-170; >= 32768 two's complement)

@@ -47,6 +47,14 @@ CORPUS = [
     "10 5 1",
     "   \t ",
     "\t> info",            # leading tab defeats the info-frame check on BOTH paths
+    # node id at and beyond the int range: out of range rejects the frame
+    "2147483647 1 2",
+    "2147483647.5 1 2",
+    "-2147483648.9 1 2",
+    "2147483648 1 2",
+    "-2147483649 1 2",
+    "99999999999 1 2",
+    "1e10 1 2",
 ]
 
 

@@ -91,6 +91,25 @@ def test_pipeline_end_to_end_delivery_and_dead_letter(spark, scratch):
     assert reasons == {"> info line": "info_frame", "10 8a2 3": "non_numeric"}
 
 
+def test_await_all_raises_naming_active_queries(spark, scratch):
+    """A processing-time pipeline never terminates: await_all says so
+    instead of returning as if it had."""
+    from oem_gateway_spark.streaming.pipeline import GatewayPipeline
+
+    inp = _write_frames(scratch, FRAMES)
+    pipe = GatewayPipeline(
+        spark, _gateway_config(inp), os.path.join(scratch, "ckpt"), poster=lambda u: "ok"
+    )
+    pipe.start()
+    try:
+        with pytest.raises(TimeoutError) as err:
+            pipe.await_all(timeout_s=2)
+    finally:
+        pipe.stop()
+    assert "gateway-sink-emon" in str(err.value)
+    assert "gateway-dead-letter" in str(err.value)
+
+
 def test_sink_failure_replay_at_least_once(spark, scratch):
     """B5: a sink that fails its first batch gets the SAME micro-batch
     replayed from the checkpoint on restart — no data loss."""
