@@ -7,7 +7,8 @@ Scale notes (100 TB design):
     ``spark.sql.shuffle.partitions`` at every scale factor.
   - ``spark.sql.shuffle.partitions`` is only the *upper bound* pre-AQE; on a
     real cluster set it ~2-3x total cores (e.g. 8000 for 1000 executors x 4
-    cores) and let AQE coalesce down.  Locally 32 matches local[32].
+    cores) and let AQE coalesce down.  Locally it is the usable CPUs,
+    like the master's ``local[N]``.
   - Arrow enabled so any pandas_udf / mapInPandas path is batch-vectorized.
   - Session timezone pinned to UTC so timestamp semantics match the DuckDB
     oracle and are cluster-node independent.
@@ -17,7 +18,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
+
+
+def _cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -56,7 +63,7 @@ DEFAULT_CONF: dict[str, str] = {
     # type — read as long and let the catalog convert to a µs timestamp
     # (values are exact µs, verified; DuckDB agrees bit-for-bit).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": _cpus(),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.streaming.schemaInference": "false",
@@ -69,8 +76,8 @@ DEFAULT_CONF: dict[str, str] = {
     # (tmpfs).  Interleaved A/B at sf0.1 (r14, guide §5/§6 small-file
     # cost): stream_stream_full_outer_join 1.44x, stream_state_reader_
     # rocksdb 1.43x, stream_upsert_resume 1.37x, stream_join_then_window
-    # 1.14x median speedup.  Re-enable per-deployment when checkpoint
-    # storage lacks its own integrity layer.
+    # 1.14x median speedup.  Not in RUNTIME_CONF_KEYS, so a session that
+    # sets it to true (checkpoint storage with no integrity layer) keeps it.
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
     # WITH RECURSIVE safety valve: Spark caps total rows emitted across
     # recursion at 1M by default, which a modest hierarchy exceeds
@@ -106,17 +113,23 @@ RUNTIME_CONF_KEYS: tuple[str, ...] = (
     "spark.sql.cbo.enabled",
     "spark.sql.cbo.joinReorder.enabled",
     "spark.sql.cteRecursionRowLimit",
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled",
 )
+
+
+def _set_conf(spark: SparkSession, key: str, value: str) -> None:
+    """``spark.conf.set`` that skips only a conf fixed at JVM or session
+    start; any other error (a bad value, say) is raised."""
+    try:
+        spark.conf.set(key, value)
+    except PySparkException as e:
+        if e.getCondition() not in ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"):
+            raise
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     """Assert the runtime-settable engine conf on an arbitrary session."""
     for k in RUNTIME_CONF_KEYS:
-        try:
-            spark.conf.set(k, DEFAULT_CONF[k])
-        except Exception:
-            pass  # conf removed/renamed in a future Spark: degrade gracefully
+        _set_conf(spark, k, DEFAULT_CONF[k])
     return spark
 
 
@@ -171,8 +184,7 @@ def get_spark(
     on a cluster, pass None and submit with ``--master``/deploy-mode instead.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{_cpus()}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
     fast = _fast_tmp_base() if master.startswith("local") else None
@@ -194,10 +206,7 @@ def get_spark(
     spark = builder.getOrCreate()
     # getOrCreate may return a pre-existing session whose conf ignores the
     # builder values — re-assert every runtime-settable key (static confs
-    # like driver.memory raise CANNOT_MODIFY_CONFIG; skip those).
+    # like driver.memory keep the value the JVM started with).
     for k, v in conf.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on an existing session; builder value applies
+        _set_conf(spark, k, v)
     return spark

@@ -8,11 +8,13 @@ Ref: oemgatewaybuffer.py :: OemGatewayEmoncmsBuffer._send_data (~l.80-115):
   - B5 on failure keep the buffer -> retry next tick (at-least-once)
   - B6 send every ~0.2 s tick
 
-Engine mapping: one ``foreachBatch`` function per sink.  The payload is
-built on the driver from the batch's rows, one collect per batch: B4 is
-one GET carrying the whole batch, so every row reaches the driver anyway.
-The ``ingest_ts`` cast to epoch seconds happens in Spark, so Δt does not
-depend on the Python process's time zone.  Structured Streaming's
+Engine mapping: one ``foreachBatch`` function per sink.  The sink query's
+own plan projects the parsed frames to ``sink_rows``, with ``ingest_ts``
+cast to epoch seconds in Spark, so Δt does not depend on the Python
+process's time zone and no batch builds a projection of its own.  The
+payload is built on the driver from the batch's rows, one collect per
+batch: B4 is one GET carrying the whole batch, so every row reaches the
+driver anyway.  Structured Streaming's
 checkpoint replays a failed micro-batch, giving the same
 at-least-once contract with no hand-rolled buffer and no loss cap (the
 reference drops oldest rows beyond its buffer bound; we never drop — the
@@ -71,10 +73,16 @@ def encode_bulk(rows: list[tuple[float, int, list[float]]], send_time: float) ->
     return json.dumps(out, separators=(",", ":"))
 
 
+def sink_rows(parsed: DataFrame) -> DataFrame:
+    """Parsed frames as the rows ``process_batch`` posts: ingest_ts as
+    epoch seconds (a double), node and values."""
+    return parsed.select(F.col("ingest_ts").cast("double"), "node", "values")
+
+
 class EmoncmsSink:
     """foreachBatch writer delivering parsed frames to an emoncms server.
 
-    Expects rows with columns (ingest_ts timestamp, node int,
+    Expects the rows of ``sink_rows``: (ingest_ts double, node int,
     values array<double>).  ``active`` mirrors the reference's per-sink
     gate (P8) — an inactive sink acknowledges batches without sending.
     """
@@ -119,9 +127,7 @@ class EmoncmsSink:
         """
         if not self.active:  # P8 gate
             return
-        rows = df.select(
-            F.col("ingest_ts").cast("double"), "node", "values"
-        ).collect()
+        rows = df.collect()
         if not rows:
             return
         send_time = self.clock()
@@ -149,13 +155,3 @@ class EmoncmsSink:
             f"emoncms delivery failed for batch {batch_id}: {last_err}"
         )
 
-
-def dead_letter_writer(target_dir: str) -> Callable[[DataFrame, int], None]:
-    """foreachBatch writer appending rejected frames (with reasons) to a
-    parquet dead-letter table — the engine upgrade over the reference's
-    log-and-drop (P3)."""
-
-    def _write(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(target_dir)
-
-    return _write

@@ -7,13 +7,17 @@ The reference's dataflow (SURVEY §3.2) as Structured Streaming:
                        (checkpointed independently, like each buffer kept
                        its own in-memory list).  Each query opens its own
                        listener connection, so a socket listener gets one
-                       TCP connection per query.
+                       TCP connection per query.  A socket batch is one
+                       partition, so one task (sources/frames_source.py).
   P1-P6 parse chain -> functions/frames.py transforms (codegen, no UDF)
   P7 timestamping   -> ingest_ts at the source (socket includeTimestamp /
                        current_timestamp)
   B1-B6 delivery    -> sinks/emoncms.py foreachBatch with checkpoint-replay
                        at-least-once
-  dead letter       -> rejected frames (with reasons) to a parquet table
+  dead letter       -> rejects (with reasons) via a parquet file sink, exactly
+                       once through its ``_spark_metadata`` log.  Upgrade:
+                       files an older ``foreachBatch`` append left in
+                       ``dead-letter/`` are not in that log, so not read back.
   C2 hot settings   -> ConfigWatcher + restart_from_config (offsets resume
                        from checkpoints, so restart == the reference's
                        hot-apply)
@@ -41,7 +45,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from oem_gateway_spark.config import GatewayConfig
 from oem_gateway_spark.functions import frames as FR
-from oem_gateway_spark.sinks.emoncms import EmoncmsSink, dead_letter_writer
+from oem_gateway_spark.sinks.emoncms import EmoncmsSink, sink_rows
 from oem_gateway_spark.sources.frames_source import (
     file_frame_stream,
     socket_frame_stream,
@@ -90,26 +94,26 @@ class GatewayPipeline:
             out = out.unionByName(s)
         return out
 
-    def parsed(self, source: DataFrame) -> DataFrame:
-        parse = FR.parse_rfm2pi_frames if self.rfm2pi else FR.parse_serial_frames
-        return parse(source)
-
-    def rejected(self, source: DataFrame) -> DataFrame:
-        return FR.dead_letter(source, rfm2pi=self.rfm2pi)
-
     # ------------------------------------------------------------------ run
 
     def start(self, trigger_available_now: bool = False) -> list[StreamingQuery]:
         self.trigger_available_now = trigger_available_now
         source = self.source_stream()
-        parsed = self.parsed(source)
-        rejects = self.rejected(source)
+        parse = FR.parse_rfm2pi_frames if self.rfm2pi else FR.parse_serial_frames
+        parsed = parse(source)
+        rejects = FR.dead_letter(source, rfm2pi=self.rfm2pi)
 
-        def trig(writer):
+        def start_query(writer, name: str, checkpoint: str) -> None:
+            writer = writer.option(
+                "checkpointLocation", os.path.join(self.checkpoint_root, checkpoint)
+            ).queryName(name)
             if trigger_available_now:
-                return writer.trigger(availableNow=True)
-            return writer.trigger(processingTime=f"{self.config.trigger_ms} milliseconds")
+                writer = writer.trigger(availableNow=True)
+            else:
+                writer = writer.trigger(processingTime=f"{self.config.trigger_ms} milliseconds")
+            self.queries.append(writer.start())
 
+        rows = sink_rows(parsed)
         for bc in self.config.buffers.values():
             sink = EmoncmsSink(
                 domain=bc.domain,
@@ -120,44 +124,26 @@ class GatewayPipeline:
                 poster=self.poster,
             )
             self.sinks[bc.name] = sink
-            q = trig(
-                parsed.writeStream.foreachBatch(sink.process_batch)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(self.checkpoint_root, f"sink-{bc.name}"),
-                )
-                .queryName(f"gateway-sink-{bc.name}")
-            ).start()
-            self.queries.append(q)
+            start_query(
+                rows.writeStream.foreachBatch(sink.process_batch),
+                f"gateway-sink-{bc.name}", f"sink-{bc.name}",
+            )
 
         if self.parquet_sink_dir:
             # The 100 TB delivery target: readings appended as parquet
             # partitioned by node (at scale: node + date) — columnar,
             # partition-pruned, no per-row HTTP in the path.
             readings = parsed.withColumn("node_part", F_col("node"))
-            pq = trig(
-                readings.writeStream.format("parquet")
-                .partitionBy("node_part")
-                .option("path", self.parquet_sink_dir)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(self.checkpoint_root, "sink-parquet"),
-                )
-                .queryName("gateway-parquet-sink")
-            ).start()
-            self.queries.append(pq)
-
-        dlq = trig(
-            rejects.writeStream.foreachBatch(
-                dead_letter_writer(os.path.join(self.checkpoint_root, "dead-letter"))
+            start_query(
+                readings.writeStream.format("parquet").partitionBy("node_part")
+                .option("path", self.parquet_sink_dir),
+                "gateway-parquet-sink", "sink-parquet",
             )
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoint_root, "sink-dead-letter"),
-            )
-            .queryName("gateway-dead-letter")
-        ).start()
-        self.queries.append(dlq)
+        start_query(
+            rejects.writeStream.format("parquet")
+            .option("path", os.path.join(self.checkpoint_root, "dead-letter")),
+            "gateway-dead-letter", "sink-dead-letter",
+        )
         return self.queries
 
     def await_all(self, timeout_s: float | None = None) -> None:

@@ -602,10 +602,9 @@ def stream_stream_full_outer_rocksdb(
     4x.  Results are layout-invariant (same oracle hash, re-proven at
     sf0.001/sf0.01); interleaved A/B at sf0.1: 1.35x median.  The
     paragraph above about four stores describes the v2 layout the
-    DEFAULT-provider twin still runs; v3 liveness is pinned by
-    STATE_METRICS["..."]["state_store_dirs"] == 1 in
-    tests/test_round14_ops.py (v2 lays out 4 store dirs per
-    partition)."""
+    DEFAULT-provider twin still runs; v3 liveness is pinned in
+    tests/test_round14_ops.py by none of v2's four per-partition store
+    dirs appearing in STATE_METRICS["..."]["state_store_dirs"]."""
     from oem_gateway_spark.suite.streaming_batch import (
         _interval_match,
         _purchase_click_sides,
@@ -666,7 +665,7 @@ def stream_stream_full_outer_rocksdb(
             # CRCs are dot-prefixed and uncounted).
             "spark_checksum_files": len(
                 glob.glob(
-                    os.path.join(ckpt, "state", "**", "*.crc"),
+                    os.path.join(ckpt, "**", "*.crc"),
                     recursive=True,
                 )
             ),

@@ -8,7 +8,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import functions as F
 
-from oem_gateway_spark.sinks.emoncms import EmoncmsSink, encode_bulk
+from oem_gateway_spark.sinks.emoncms import EmoncmsSink, encode_bulk, sink_rows
 
 SEND_TIME = 1_700_000_100.0
 
@@ -18,13 +18,11 @@ def _data(url: str) -> list:
 
 
 def _batch(spark, rows):
-    """(epoch seconds, node, values) rows as a parsed-frame micro-batch
-    spread over several partitions."""
-    return (
-        spark.createDataFrame(rows, "t double, node int, values array<double>")
-        .repartition(3)
-        .select(F.col("t").cast("timestamp").alias("ingest_ts"), "node", "values")
-    )
+    """(epoch seconds, node, values) rows as a micro-batch of the sink
+    query's projected frame, spread over several partitions."""
+    return spark.createDataFrame(
+        rows, "ingest_ts double, node int, values array<double>"
+    ).repartition(3)
 
 
 def _sink(posted: list[str], **kwargs) -> EmoncmsSink:
@@ -91,3 +89,17 @@ def test_reading_beyond_long_range_is_delivered(spark):
     _sink(posted).process_batch(_batch(spark, [(SEND_TIME - 1, 10, [1e19, 0.5])]), 0)
     assert len(posted) == 1
     assert _data(posted[0]) == [[-1, 10, 10**19, 0.5]]
+
+
+def test_sink_rows_cast_ingest_ts_to_epoch_seconds(spark):
+    """The projection the sink query plans: a parsed frame's timestamp
+    becomes epoch seconds as a double."""
+    t = SEND_TIME - 1.25
+    parsed = spark.createDataFrame(
+        [(t, 10, [1.0])], "t double, node int, values array<double>"
+    ).select(F.col("t").cast("timestamp").alias("ingest_ts"), "node", "values")
+    out = sink_rows(parsed)
+    assert out.dtypes == [
+        ("ingest_ts", "double"), ("node", "int"), ("values", "array<double>")
+    ]
+    assert [tuple(r) for r in out.collect()] == [(t, 10, [1.0])]

@@ -298,7 +298,12 @@ def test_full_outer_rocksdb_join_state_format_v3(spark):
     out = stream_stream_full_outer_rocksdb(spark, SF)
     assert out.count() > 0
     m = STATE_METRICS["stream_stream_full_outer_rocksdb"]
-    assert m["state_store_dirs"] == ["SSTs"], (
+    v2_dirs = {
+        f"{side}-{store}"
+        for side in ("left", "right")
+        for store in ("keyToNumValues", "keyWithIndexToValue")
+    }
+    assert not v2_dirs & set(m["state_store_dirs"]), (
         f"expected v3 single-store layout, got {m['state_store_dirs']}"
     )
     assert m["changelog_files"] >= 1, m

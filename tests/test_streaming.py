@@ -144,6 +144,99 @@ def test_sink_failure_replay_at_least_once(spark, scratch):
     assert pipe2.sinks["emon"].delivered_batches  # the batch landed
 
 
+def test_dead_letter_replay_writes_each_reject_once(spark, scratch):
+    """A crash after the dead letter's write and before its commit makes
+    the restart replay that batch; the file sink's ``_spark_metadata`` log
+    keeps each reject in ``dead-letter/`` exactly once."""
+    from oem_gateway_spark.streaming.pipeline import GatewayPipeline
+
+    inp = _write_frames(scratch, FRAMES)
+    ckpt = os.path.join(scratch, "ckpt")
+
+    def run() -> None:
+        pipe = GatewayPipeline(spark, _gateway_config(inp), ckpt, poster=lambda u: "ok")
+        pipe.start(trigger_available_now=True)
+        pipe.await_all(timeout_s=120)
+        pipe.stop()
+
+    run()
+    commits = os.path.join(ckpt, "sink-dead-letter", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    run()
+
+    dead = spark.read.parquet(os.path.join(ckpt, "dead-letter")).collect()
+    assert sorted(r["line"] for r in dead) == ["10 8a2 3", "> info line"]
+
+
+def test_live_socket_sink_batch_runs_one_task(spark, scratch):
+    """A socket listener is read as one partition, so every stage of the
+    live emoncms sink query runs one task; the frames each batch read are
+    in the query progress."""
+    import socket
+    import threading
+
+    from oem_gateway_spark.config import BufferConfig, GatewayConfig, ListenerConfig
+    from oem_gateway_spark.streaming.pipeline import GatewayPipeline
+
+    server = socket.create_server(("127.0.0.1", 0))
+    server.settimeout(0.2)
+    port = server.getsockname()[1]
+    done = threading.Event()
+
+    def serve() -> None:  # every query's connection gets the frames
+        conns = []
+        while not done.is_set():
+            try:
+                conn, _ = server.accept()
+            except TimeoutError:
+                continue
+            conn.sendall(("\n".join(FRAMES) + "\n").encode())
+            conns.append(conn)
+        for conn in conns:
+            conn.close()
+
+    thread = threading.Thread(target=serve, daemon=True)
+    thread.start()
+    cfg = GatewayConfig(
+        listeners={"live": ListenerConfig(
+            name="live", type="socket", host="127.0.0.1", port=port
+        )},
+        buffers={"emon": BufferConfig(name="emon", apikey="k")},
+        trigger_ms=200,
+    )
+    posted: list[str] = []
+    pipe = GatewayPipeline(
+        spark, cfg, os.path.join(scratch, "ckpt"), poster=lambda u: (posted.append(u), "ok")[1]
+    )
+    pipe.start()
+    sink_q = next(q for q in pipe.queries if q.name == "gateway-sink-emon")
+    try:
+        deadline = time.monotonic() + 60  # until a batch that posted is committed
+        while time.monotonic() < deadline and not (
+            posted and any(p.numInputRows for p in sink_q.recentProgress)
+        ):
+            time.sleep(0.2)
+    finally:
+        pipe.stop()
+        done.set()
+        thread.join(timeout=10)
+        server.close()
+
+    assert not thread.is_alive()
+    assert posted, "the live sink posted nothing"
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(sink_q.runId))
+    stages = [sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds]
+    assert stages and [tracker.getStageInfo(sid).numTasks for sid in stages] == [1] * len(stages)
+    progress = sink_q.recentProgress
+    observed = [p.observedMetrics.get(f"socket:127.0.0.1:{port}") for p in progress]
+    frames = sum(m["frames"] for m in observed if m is not None)
+    assert frames == sum(p.numInputRows for p in progress) > 0
+
+
 def test_fanout_multiple_sinks(spark, scratch):
     """R1: every frame reaches every active buffer independently."""
     from oem_gateway_spark.streaming.pipeline import GatewayPipeline
