@@ -14,10 +14,13 @@ Reference semantics (SURVEY.md §1-2, reconstructed citations):
     ``v = b[i] + 256*b[i+1]; if v >= 32768: v -= 65536``  [~l.160-170]
   - P6 project node id: first token is the node, rest are values [~l.158]
 
-All transforms are built-in-function compositions (no Python UDFs): they
-compile to whole-stage-codegen'd expressions, so the parse chain is a single
-JVM pipeline per partition — the 100 TB-safe shape (no shuffle anywhere in
-P1-P6, perfectly parallel over input splits).
+All transforms are built-in-function compositions (no Python UDFs), so the
+parse chain runs in the JVM per partition — the 100 TB-safe shape (no
+shuffle anywhere in P1-P6, perfectly parallel over input splits).  Most of
+it is whole-stage code-generated, but not all: P3's ``exists`` lambda
+(``_all_numeric``) is a higher-order function, which falls back from
+whole-stage codegen, so the filter that carries it generates its
+predicate again for every partition (~1.4 ms each on a 4-core host).
 
 Instead of silently log-dropping rejects like the reference, rejects carry a
 ``reject_reason`` so callers can route them to a dead-letter sink.

@@ -161,25 +161,23 @@ def ivf_cells(vec: Column, nprobe: int) -> Column:
     return _cells(vec)
 
 
+def ivf_scores_sql(vec_expr: str) -> str:
+    """DuckDB list of the per-centroid scores ``||c||^2 - 2 v.c`` that
+    ivf_cell/ivf_cells rank (sequential-fold dots), in centroid order."""
+    scores = (
+        f"({sum(v * v for v in CENTROIDS[c])!r} - 2.0 * "
+        f"({V.dot_sql_duckdb(vec_expr, centroid_sql(c))}))"
+        for c in range(N_CENTROIDS)
+    )
+    return f"[{', '.join(scores)}]"
+
+
 def ivf_cell_sql(vec_expr: str) -> str:
-    """DuckDB twin of ivf_cell: explicit argmin over the centroid scores
-    (sequential-fold dots; ties impossible with random data)."""
-    scores = []
-    for c in range(N_CENTROIDS):
-        d = V.dot_sql_duckdb(vec_expr, centroid_sql(c))
-        c_sq = sum(v * v for v in CENTROIDS[c])
-        scores.append(f"({c_sq!r} - 2.0 * ({d}))")
-    # argmin via CASE chain (strictly-less keeps the lowest index on ties,
-    # matching numpy argmin).
-    expr_idx, expr_best = "0", scores[0]
-    for c in range(1, N_CENTROIDS):
-        expr_idx = (
-            f"CASE WHEN ({scores[c]}) < ({expr_best}) THEN {c} ELSE ({expr_idx}) END"
-        )
-        expr_best = (
-            f"CASE WHEN ({scores[c]}) < ({expr_best}) THEN ({scores[c]}) ELSE ({expr_best}) END"
-        )
-    return f"CAST({expr_idx} AS INT)"
+    """DuckDB twin of ivf_cell: argmin over the centroid scores.
+    list_position finds the FIRST minimum, so a tie keeps the lowest
+    index, matching numpy argmin."""
+    s = ivf_scores_sql(vec_expr)
+    return f"CAST(list_position({s}, list_min({s})) - 1 AS INT)"
 
 
 def ivf_ann_topk(

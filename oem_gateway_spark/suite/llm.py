@@ -809,18 +809,13 @@ def _ivf_nprobe_oracle(k: int = 3, stride: int = 100, nprobe: int = 2) -> str:
     score numpy argsorts (||c||^2 - 2 v.c), keep the nprobe best."""
     cell = S.ivf_cell_sql("embedding")
     cos = V.cosine_sql_duckdb("c.embedding", "q.embedding")
-    score_list = ", ".join(
-        f"({sum(v * v for v in S.CENTROIDS[c])!r} - 2.0 * "
-        f"({V.dot_sql_duckdb('embedding', S.centroid_sql(c))}))"
-        for c in range(S.N_CENTROIDS)
-    )
     return f"""
     WITH b AS (SELECT vec_id, embedding, {cell} AS cell FROM embeddings),
     q0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {stride} = 0),
     qscore AS (
       SELECT vec_id, embedding,
              unnest(range({S.N_CENTROIDS})) AS cell,
-             unnest([{score_list}]) AS score
+             unnest({S.ivf_scores_sql("embedding")}) AS score
       FROM q0),
     probed AS (
       SELECT vec_id, embedding, cell

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from oem_gateway_spark.catalog import load_table
 from oem_gateway_spark.functions import hashing as H
-from oem_gateway_spark.suite.registry import query
+from oem_gateway_spark.suite.registry import query, record
 
 _DAY_MS = 86_400_000
 
@@ -756,13 +756,6 @@ def g_framelog_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Offset-contract witness numbers from the most recent
-# g_serial_stream_replay run (pytest pin; same pattern as
-# statestore_extra.STATE_METRICS — the registry signature has no side
-# channel for progress handles).
-SERIAL_REPLAY_METRICS: dict[str, int] = {}
-
-
 @query(
     "g_framelog_pushdown",
     oracle="""
@@ -1001,6 +994,7 @@ def g_serial_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+        record(stream=q)
         return sum((p.get("numInputRows") or 0) for p in q.recentProgress)
 
     # Stateless source: shuffle partitions only shape the sink files.
@@ -1012,13 +1006,11 @@ def g_serial_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         p1 = run_phase()
         _copy_range("ab", cut, size, live)
         p2 = run_phase()
-    SERIAL_REPLAY_METRICS.update(
-        {
-            "phase1_rows": p1,
-            "phase2_rows": p2,
-            "total_lines": _count_lines(full_log),
-            "phase1_complete_lines": phase1_complete,
-        }
+    record(
+        phase1_rows=p1,
+        phase2_rows=p2,
+        total_lines=_count_lines(full_log),
+        phase1_complete_lines=phase1_complete,
     )
     # The sink output is read lazily below, but the live log is not:
     # drop it now so the (possibly tmpfs) scratch holds only the output.
@@ -1038,11 +1030,6 @@ def g_serial_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_price_cents"
         ),
     )
-
-
-# Witness numbers from the most recent g_framelog_stream_partitioned run
-# (pytest pin; same pattern as SERIAL_REPLAY_METRICS).
-FRAMELOG_STREAM_METRICS: dict[str, int] = {}
 
 
 @query(
@@ -1177,6 +1164,7 @@ def g_framelog_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
             .start()
         )
         q.awaitTermination()
+        record(stream=q)
         return sum((p.get("numInputRows") or 0) for p in q.recentProgress)
 
     cuts = {f: cut_point(f, i) for i, f in enumerate(shard_files)}
@@ -1190,9 +1178,7 @@ def g_framelog_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
                 f, os.path.join(live, os.path.basename(f)), cut, os.path.getsize(f)
             )
         p2 = run_phase()
-    FRAMELOG_STREAM_METRICS.update(
-        {"phase1_rows": p1, "phase2_rows": p2, "n_shards": len(shard_files)}
-    )
+    record(phase1_rows=p1, phase2_rows=p2, n_shards=len(shard_files))
     shutil.rmtree(live, ignore_errors=True)
 
     raw = spark.read.parquet(out_dir)
@@ -1280,6 +1266,7 @@ def g_framelog_sink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+        record(stream=q)
     files = framelog_sink.committed_files(sink_dir)
     t = F.split("value", " ")
     parsed = spark.read.text(files).select(

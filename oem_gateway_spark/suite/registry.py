@@ -5,17 +5,29 @@ DuckDB runs on the same parquet registered as views.  Column names/types must
 match between the two — alias every computed column identically on both
 sides; cast count/sum-of-int outputs to BIGINT in the oracle (DuckDB sums to
 HUGEINT otherwise).
+
+``run(name, spark, sf_dir)`` executes one query (build, collect, release
+owned caches) and returns its ``RunRecord``: timings, the built frame, the
+collected rows, a progress digest per streaming query the build ran, and
+builder-specific facts.  Builders add to the record in progress through
+``record``; under a bare ``fn`` call (no ``run`` active) that is a no-op.
 """
 
 from __future__ import annotations
 
 import functools
 import logging
+import time
 from collections.abc import Callable
-from dataclasses import dataclass
+from contextvars import ContextVar
+from dataclasses import dataclass, field
 
+import pandas as pd
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
+from oem_gateway_spark.operators.dedup import release_caches
 from oem_gateway_spark.session import ensure_runtime_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -144,3 +156,91 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return wrapped
 
     return deco
+
+
+# ------------------------------------------------------------- run records
+
+
+@dataclass
+class RunRecord:
+    """What one ``run`` of a registry query did.
+
+    ``streams`` holds one ``stream_digest`` per streaming query the build
+    ran, in start order.  ``facts`` holds builder-specific numbers
+    (changelog files, phase rows, state-store dirs, ...); an accumulator
+    recorded as a fact is replaced by its value once the action ran."""
+
+    build_ms: float = 0.0
+    act_ms: float = 0.0
+    df: DataFrame | None = None
+    result: pd.DataFrame | None = None
+    streams: list[dict] = field(default_factory=list)
+    facts: dict = field(default_factory=dict)
+
+
+_ACTIVE: ContextVar[RunRecord | None] = ContextVar("run_record", default=None)
+
+
+def stream_digest(q: StreamingQuery) -> dict:
+    """A terminated query's progress, whole and digested: which stateful
+    operators ran, how many micro-batches, the final watermark, and the
+    last batch's first state-operator custom metrics (rocksdb* keys iff
+    the RocksDB provider was live; the HDFS provider reports
+    loadedMapCache* keys instead)."""
+    progs = list(q.recentProgress or [])
+    last = progs[-1] if progs else {}
+    ops = last.get("stateOperators") or []
+    return {
+        "progress": progs,
+        "n_batches": len(progs),
+        "stateful_operators": sorted(
+            {
+                so.get("operatorName")
+                for p in progs
+                for so in (p.get("stateOperators") or [])
+                if so.get("operatorName")
+            }
+        ),
+        # distinct count per batch: two chained windowed aggs both report
+        # as 'stateStoreSave', so the NAME set cannot distinguish one agg
+        # from two — the per-batch operator count can.
+        "n_stateful_operators": max(
+            (len(p.get("stateOperators") or []) for p in progs), default=0
+        ),
+        "final_watermark": (last.get("eventTime") or {}).get("watermark"),
+        "custom": dict(ops[0].get("customMetrics") or {}) if ops else {},
+    }
+
+
+def record(stream: StreamingQuery | None = None, **facts) -> None:
+    """Add to the record of the ``run`` in progress: the digest of a
+    terminated streaming query and/or builder facts.  No-op when no
+    ``run`` is active."""
+    rec = _ACTIVE.get()
+    if rec is None:
+        return
+    if stream is not None:
+        rec.streams.append(stream_digest(stream))
+    rec.facts.update(facts)
+
+
+def run(name: str, spark: SparkSession, sf_dir: str) -> RunRecord:
+    """Build ``name``, collect it with ``toPandas`` and release the
+    caches its operators own; return the run's record."""
+    rec = RunRecord()
+    token = _ACTIVE.set(rec)
+    try:
+        t0 = time.perf_counter()
+        rec.df = REGISTRY[name].fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        rec.result = rec.df.toPandas()
+        rec.build_ms = (t1 - t0) * 1e3
+        rec.act_ms = (time.perf_counter() - t1) * 1e3
+    finally:
+        _ACTIVE.reset(token)
+        if rec.df is not None:
+            release_caches(rec.df)
+    for k, v in rec.facts.items():
+        if isinstance(v, Accumulator):
+            rec.facts[k] = v.value
+    return rec

@@ -47,7 +47,7 @@ from oem_gateway_spark.suite.patterns_extra import (
     _upsert_changelog_stream,
     _upsert_final_state,
 )
-from oem_gateway_spark.suite.registry import query
+from oem_gateway_spark.suite.registry import query, record
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -58,14 +58,6 @@ _CHANGELOG_KEY = (
 )
 _PARTITIONS_KEY = "spark.sql.shuffle.partitions"
 _SEQ = count()
-
-# Per-query witness metrics from the most recent run, KEYED BY QUERY NAME
-# (r9 VERDICT: the old single LAST_STATE_METRICS slot was a latent race —
-# two concurrent runs, or a second state-store twin in the same session,
-# could overwrite each other and the pytest would assert another run's
-# metrics).  Module-level because the registry's (spark, sf_dir) ->
-# DataFrame signature has no side channel for query handles.
-STATE_METRICS: dict[str, dict] = {}
 
 
 @contextlib.contextmanager
@@ -97,13 +89,10 @@ def _scoped_conf(spark: SparkSession, values: dict[str, str]):
                 spark.conf.set(k, old)
 
 
-def _custom_state_metrics(q) -> dict:
-    """stateOperators[0].customMetrics from a query's last progress —
-    rocksdb* keys iff the RocksDB provider was actually live (the default
-    HDFS provider reports loadedMapCache* keys instead)."""
-    progress = q.lastProgress or {}
-    ops = progress.get("stateOperators") or []
-    return dict(ops[0].get("customMetrics") or {}) if ops else {}
+def _changelog_files(ckpt: str) -> int:
+    return len(
+        glob.glob(os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True)
+    )
 
 
 @query("stream_upsert_rocksdb", oracle=UPSERT_LWW_ORACLE)
@@ -116,9 +105,9 @@ def stream_upsert_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``start()``, restored after ``awaitTermination()`` in a ``finally``
     that holds the pre-captured values — this is NOT a conf-leak
     witness like q_bloom_prune: the provider affects only the stream
-    started inside the guarded window, not later planning).  The query
-    progress's custom metrics land in STATE_METRICS["stream_upsert_rocksdb"];
-    rocksdb* keys there are the proof the provider was live.  Results
+    started inside the guarded window, not later planning).  The run
+    record's stream digest carries the progress's custom metrics; rocksdb*
+    keys there are the proof the provider was live.  Results
     must hash-equal the same oracle as the default-provider twin:
     state-store choice is an execution detail, never a semantics change.
 
@@ -155,17 +144,9 @@ def stream_upsert_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        STATE_METRICS["stream_upsert_rocksdb"] = {
-            **_custom_state_metrics(q),
-            "changelog_files": len(
-                glob.glob(
-                    os.path.join(ckpt, "state", "**", "*.changelog"),
-                    recursive=True,
-                )
-            ),
-        }
+        record(stream=q, changelog_files=_changelog_files(ckpt))
         log = spark.table(name)
-        # r13 ADVICE: the metric above is the only reader of this
+        # r13 ADVICE: the count above is the only reader of this
         # checkpoint (the memory sink holds the results), and the
         # stale-scratch sweep only reclaims dirs whose OWNER pid died —
         # a long-lived bench/suite session re-invoking this query would
@@ -296,13 +277,13 @@ def stream_upsert_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
        two data batches have committed — between batch boundaries or mid
        batch 2, wherever the kill lands.  Phase 2 starts a BRAND-NEW
        query on the SAME checkpoint: it must resume from the offset log
-       (first batchId >= 2, recorded in STATE_METRICS), rebuild per-key
+       (first batchId >= 2, recorded in the run record), rebuild per-key
        LWW state from the store, and finish the remaining files.
     2. ROCKSDB CHANGELOG CHECKPOINTING: both phases run under
        RocksDBStateStoreProvider with changelogCheckpointing enabled —
        the 100 TB-default commit path (per-batch changelog appends
        instead of full zip snapshots; *.changelog files in the state dir
-       are the witness, counted into STATE_METRICS).
+       are the witness, counted into the run record's facts).
     3. EXACTLY-ONCE FILE SINK: the changelog lands in a parquet
        FileStreamSink whose _spark_metadata commit log makes replayed
        batches idempotent — an aborted batch's orphan task files are
@@ -381,6 +362,7 @@ def stream_upsert_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "missed; <2 = host stalled past the 300 s poll) — "
                 "refusing to return an unwitnessed pass"
             )
+        record(stream=q1)
         # ---- phase 2: a NEW query resumes the same checkpoint -----------
         q2 = (
             _upsert_changelog_stream(spark, sf_dir, output_mode="append")
@@ -393,22 +375,13 @@ def stream_upsert_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q2.awaitTermination()
         resumed = q2.recentProgress
-        STATE_METRICS["stream_upsert_resume"] = {
-            "phase1_batches": len(phase1),
-            "resume_first_batch": (
-                resumed[0]["batchId"] if resumed else None
-            ),
-            "resume_rows": sum(
-                (p.get("numInputRows") or 0) for p in resumed
-            ),
-            "changelog_files": len(
-                glob.glob(
-                    os.path.join(ckpt, "state", "**", "*.changelog"),
-                    recursive=True,
-                )
-            ),
-            "custom": _custom_state_metrics(q2),
-        }
+        record(
+            stream=q2,
+            phase1_batches=len(phase1),
+            resume_first_batch=resumed[0]["batchId"] if resumed else None,
+            resume_rows=sum((p.get("numInputRows") or 0) for p in resumed),
+            changelog_files=_changelog_files(ckpt),
+        )
     # The _spark_metadata commit log scopes this read to COMMITTED files
     # only — any orphan task files from the aborted batch are invisible.
     return _upsert_final_state(spark.read.parquet(out_dir))
@@ -472,6 +445,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+        record(stream=q)
     return (
         spark.read.format("statestore")
         .load(ckpt)
@@ -510,7 +484,7 @@ def stream_state_reader_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     against production checkpoints (which are RocksDB by default):
     audit a key's register, quantify skew via partition_id, verify a
     repair — without the owning query or its session confs.  The
-    changelog-file count lands in STATE_METRICS as the proof the
+    changelog-file count lands in the run record as the proof the
     commit path exercised was changelog checkpointing, and the pytest
     pin additionally asserts rocksdb* custom metrics were live in the
     writer.  Distinct grouping modulus (89 vs the HDFS twin's 97) so a
@@ -545,15 +519,7 @@ def stream_state_reader_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        STATE_METRICS["stream_state_reader_rocksdb"] = {
-            "changelog_files": len(
-                glob.glob(
-                    os.path.join(ckpt, "state", "**", "*.changelog"),
-                    recursive=True,
-                )
-            ),
-            "custom": _custom_state_metrics(q),
-        }
+        record(stream=q, changelog_files=_changelog_files(ckpt))
     # Deliberately outside _scoped_conf: the reader must work against a
     # foreign RocksDB checkpoint with no session-level provider hint.
     return (
@@ -589,10 +555,9 @@ def stream_stream_full_outer_rocksdb(
     state-store choice is an execution detail, so this twin reuses the
     same builder + join + sentinel machinery and hash-matches the SAME
     batch FULL JOIN oracle (streaming_batch.FULL_OUTER_JOIN_ORACLE).
-    Provider liveness is recorded in
-    STATE_METRICS["stream_stream_full_outer_rocksdb"]: rocksdb* custom
-    metrics present + at least one .changelog file in the checkpoint
-    (pinned by tests/test_round13_ops.py).
+    Provider liveness is recorded in the run record: rocksdb* custom
+    metrics in the stream digest + at least one .changelog file in the
+    checkpoint (pinned by tests/test_run_records.py).
 
     r14 (r13 VERDICT #4, guide §5): ``join.stateFormatVersion=3`` —
     Spark 4's virtual-column-family join state, RocksDB-only — folds
@@ -603,8 +568,8 @@ def stream_stream_full_outer_rocksdb(
     sf0.001/sf0.01); interleaved A/B at sf0.1: 1.35x median.  The
     paragraph above about four stores describes the v2 layout the
     DEFAULT-provider twin still runs; v3 liveness is pinned in
-    tests/test_round14_ops.py by none of v2's four per-partition store
-    dirs appearing in STATE_METRICS["..."]["state_store_dirs"]."""
+    tests/test_run_records.py by none of v2's four per-partition store
+    dirs appearing in the record's ``state_store_dirs`` fact."""
     from oem_gateway_spark.suite.streaming_batch import (
         _interval_match,
         _purchase_click_sides,
@@ -636,26 +601,19 @@ def stream_stream_full_outer_rocksdb(
         )
         q.awaitTermination()
         part0 = os.path.join(ckpt, "state", "0", "0")
-        STATE_METRICS["stream_stream_full_outer_rocksdb"] = {
-            "changelog_files": len(
-                glob.glob(
-                    os.path.join(ckpt, "state", "**", "*.changelog"),
-                    recursive=True,
-                )
-            ),
+        record(
+            stream=q,
+            changelog_files=_changelog_files(ckpt),
             # v3 witness: the v2 join layout puts FOUR named store dirs
             # under each partition (left/right x keyToNumValues/
             # keyWithIndexToValue); v3's single virtual-column-family
             # store keeps its files directly in the partition dir (plus
             # a non-store _metadata dir), so the named-store count is
             # the format's fingerprint.
-            "state_store_dirs": sorted(
+            state_store_dirs=sorted(
                 d
-                for d in (
-                    os.listdir(part0) if os.path.isdir(part0) else []
-                )
-                if os.path.isdir(os.path.join(part0, d))
-                and not d.startswith("_")
+                for d in (os.listdir(part0) if os.path.isdir(part0) else [])
+                if os.path.isdir(os.path.join(part0, d)) and not d.startswith("_")
             ),
             # Engine-level checkpoint checksums are disabled (session.py
             # r14): Spark 4.1's ChecksumCheckpointFileManager writes a
@@ -663,13 +621,9 @@ def stream_stream_full_outer_rocksdb(
             # enabled; Python glob skips dot-hidden files, so this
             # counts exactly the Spark-level sidecars (Hadoop LocalFS
             # CRCs are dot-prefixed and uncounted).
-            "spark_checksum_files": len(
-                glob.glob(
-                    os.path.join(ckpt, "**", "*.crc"),
-                    recursive=True,
-                )
+            spark_checksum_files=len(
+                glob.glob(os.path.join(ckpt, "**", "*.crc"), recursive=True)
             ),
-            "custom": _custom_state_metrics(q),
-        }
+        )
         table = spark.table(name)
     return table.filter(F.col("user_id") >= 0)

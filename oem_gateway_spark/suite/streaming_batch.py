@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from oem_gateway_spark.catalog import load_table
 from oem_gateway_spark.streaming import state as ST
-from oem_gateway_spark.suite.registry import query
+from oem_gateway_spark.suite.registry import query, record
 
 _SEQ = itertools.count()
 
@@ -232,7 +232,6 @@ def _run_to_table(
     result: DataFrame,
     mode: str,
     shuffle_partitions: int | None = None,
-    progress_sink: dict | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
     memory sink; return the materialized table.
@@ -262,38 +261,10 @@ def _run_to_table(
             .start()
         )
         q.awaitTermination()
-        if progress_sink is not None:
-            # Non-vacuity channel (same pattern as STATE_METRICS /
-            # FRAMELOG_STREAM_METRICS): which stateful operators actually
-            # ran, how many micro-batches, and the final watermark — so a
-            # pytest can pin a query's claimed execution shape without
-            # re-deriving it from the result hash.
-            progs = q.recentProgress or []
-            last = progs[-1] if progs else {}
-            progress_sink.update(
-                {
-                    "n_batches": len(progs),
-                    "stateful_operators": sorted(
-                        {
-                            so.get("operatorName")
-                            for p in progs
-                            for so in (p.get("stateOperators") or [])
-                            if so.get("operatorName")
-                        }
-                    ),
-                    # distinct count per batch: two chained windowed aggs
-                    # both report as 'stateStoreSave', so the NAME set
-                    # cannot distinguish one agg from two — the per-batch
-                    # operator count can.
-                    "n_stateful_operators": max(
-                        (len(p.get("stateOperators") or []) for p in progs),
-                        default=0,
-                    ),
-                    "final_watermark": (last.get("eventTime") or {}).get(
-                        "watermark"
-                    ),
-                }
-            )
+        # The run record's execution shape (stateful operators, batch
+        # count, final watermark), so a test can pin a query's claimed
+        # shape without re-deriving it from the result hash.
+        record(stream=q)
     finally:
         if prev is not None:
             spark.conf.set(key, prev)
@@ -624,6 +595,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
+    record(stream=q)
     rollup.release_lease()
     shutil.rmtree(ckpt, ignore_errors=True)
     result = rollup.read_store(spark)
@@ -635,7 +607,6 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("min_v0", 4).alias("min_v0"),
         F.round("max_v0", 4).alias("max_v0"),
     )
-
 
 
 def _purchase_click_sides(spark: SparkSession, sf_dir: str, sentinels: bool):
@@ -964,11 +935,6 @@ def stream_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_table(result, mode="update", shuffle_partitions=8)
 
 
-# Execution-shape witness for the chained-stateful-operators query (see
-# _run_to_table's progress_sink); pinned by tests/test_round13_ops.py.
-JOIN_WINDOW_CHAIN_METRICS: dict = {}
-
-
 @query(
     "stream_join_then_window",
     oracle="""
@@ -1055,13 +1021,7 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_c",
         )
     )
-    JOIN_WINDOW_CHAIN_METRICS.clear()
-    table = _run_to_table(
-        per_user,
-        mode="append",
-        shuffle_partitions=8,
-        progress_sink=JOIN_WINDOW_CHAIN_METRICS,
-    )
+    table = _run_to_table(per_user, mode="append", shuffle_partitions=8)
     return (
         table.filter(F.col("user_id") >= 0)  # see PUSHDOWN TRAP above
         .groupBy("win_start")
@@ -1071,10 +1031,6 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("sum_c").alias("sum_click_id"),
         )
     )
-
-
-# Execution-shape witness for the chained window->window aggregation.
-WINDOW_CHAIN_METRICS: dict = {}
 
 
 @query(
@@ -1116,7 +1072,7 @@ def stream_window_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing batches so every real 2-hour window flushes in append mode;
     sentinel rows land in their own far-future windows, which never
     close inside the replay and therefore never emit (no post-filter
-    needed — pinned by the n_batches/operator metrics below).
+    needed — pinned by the run record's n_batches/operator digest).
 
     Scale: both aggs partial-aggregate map-side; state is (windows x
     event types) rows per level — time-bounded by the watermark, so
@@ -1154,13 +1110,7 @@ def stream_window_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "peak_half_hour",
         )
     )
-    WINDOW_CHAIN_METRICS.clear()
-    table = _run_to_table(
-        outer,
-        mode="append",
-        shuffle_partitions=8,
-        progress_sink=WINDOW_CHAIN_METRICS,
-    )
+    table = _run_to_table(outer, mode="append", shuffle_partitions=8)
     # Sentinel windows never close inside the replay (watermark stops
     # 2 h short of them), so no row filter is needed; the belt-and-braces
     # guard is keyed off the sentinel GEOMETRY (r13 self-review: the
@@ -1173,10 +1123,6 @@ def stream_window_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]["mx"]
     )
     return table.filter(F.col("win_start") <= F.lit(max_real_ts))
-
-
-# Execution-shape witness for the chained dedup->window aggregation.
-DEDUP_WINDOW_CHAIN_METRICS: dict = {}
 
 
 @query(
@@ -1248,13 +1194,7 @@ def stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    DEDUP_WINDOW_CHAIN_METRICS.clear()
-    table = _run_to_table(
-        agg,
-        mode="append",
-        shuffle_partitions=8,
-        progress_sink=DEDUP_WINDOW_CHAIN_METRICS,
-    )
+    table = _run_to_table(agg, mode="append", shuffle_partitions=8)
     # Sentinel guard keyed off the sentinel GEOMETRY, not a calendar
     # date (r13 self-review: sentinels sit at max(ts)+30d — a fixed
     # '2025-01-01' cutoff never excludes them): real windows start at or
@@ -1265,10 +1205,6 @@ def stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]["mx"]
     )
     return table.filter(F.col("win_start") <= F.lit(max_real_ts))
-
-
-# Raw per-batch observation rows for the observe() witness (pytest pin).
-OBSERVE_BATCH_ROWS: list = []
 
 
 @query(
@@ -1341,8 +1277,7 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         spark_.conf.set(key, prev)
-    OBSERVE_BATCH_ROWS.clear()
-    OBSERVE_BATCH_ROWS.extend(obs)
+    record(stream=q, observe_rows=obs)
     total = {
         "n_rows": sum(m["n_rows"] for m in obs),
         "n_clicks": sum(m["n_clicks"] for m in obs),

@@ -23,7 +23,7 @@ from pyspark.sql.functions import pandas_udf, udf
 from pyspark.sql.types import DoubleType
 
 from oem_gateway_spark.catalog import load_table
-from oem_gateway_spark.suite.registry import query
+from oem_gateway_spark.suite.registry import query, record
 
 
 @query(
@@ -492,11 +492,6 @@ def u_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-worker init counter for the SCALAR_ITER witness (pytest pin channel:
-# proves the init ran once per PARTITION, not once per row/batch).
-ITER_UDF_INITS = None  # set to an accumulator by u_pandas_udf_iter
-
-
 @query(
     "u_pandas_udf_iter",
     oracle="""
@@ -525,11 +520,11 @@ def u_pandas_udf_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed lazily — the whole partition is never materialized).  The
     'model' here is a trivial coefficient so the oracle stays exact
     arithmetic; the init-once contract is the point and is pinned via
-    an accumulator (inits == partitions touched, not rows or batches).
-    min/max order-exact; round(,6) on output."""
-    global ITER_UDF_INITS
-    ITER_UDF_INITS = spark.sparkContext.accumulator(0)
-    acc = ITER_UDF_INITS
+    an accumulator recorded as the run's ``iter_udf_inits`` fact (inits
+    == partitions touched, not rows or batches).  min/max order-exact;
+    round(,6) on output."""
+    acc = spark.sparkContext.accumulator(0)
+    record(iter_udf_inits=acc)
 
     # Iterator/pd come from MODULE scope: under `from __future__ import
     # annotations` the hints are strings and pyspark resolves them in the

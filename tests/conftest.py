@@ -13,7 +13,12 @@ def pytest_configure(config):
     )
 
 
-SF_SMOKE = "/root/testdata/sf0.001"
+def pytest_collection_modifyitems(items):
+    """The run-record readers go last, after the oracle sweep has run
+    every query once; run alone, they run the queries they read."""
+    items.sort(key=lambda item: item.path.name == "test_run_records.py")
+
+
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -25,6 +30,23 @@ def spark():
         "spark.sql.shuffle.partitions": "8",
     })
     yield s
+
+
+@pytest.fixture(scope="session")
+def runs(spark):
+    """``runs(name, sf_dir=SF_ORACLE)``: the session's one ``run`` record
+    per (query, sf_dir).  The oracle sweep and the witness tests read
+    the same record, so each streaming query runs once per session."""
+    from oem_gateway_spark.suite.registry import run
+
+    memo = {}
+
+    def get(name: str, sf_dir: str = SF_ORACLE):
+        if (name, sf_dir) not in memo:
+            memo[name, sf_dir] = run(name, spark, sf_dir)
+        return memo[name, sf_dir]
+
+    return get
 
 
 @pytest.fixture(autouse=True)

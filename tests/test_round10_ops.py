@@ -1,6 +1,7 @@
-"""Round-10 additions: the checkpoint kill/resume recovery witness and
-the r9 VERDICT/ADVICE regression pins (scoped-conf capture order,
-name-keyed state metrics)."""
+"""Round-10 additions: the r9 VERDICT/ADVICE regression pins
+(scoped-conf capture order, the hierarchy fold) and the language-surface
+shape pins.  The kill/resume recovery witness reads its run record in
+tests/test_run_records.py."""
 
 import pytest
 
@@ -30,58 +31,6 @@ def test_scoped_conf_restores_on_failure(spark):
     assert spark.conf.get(key_set) == before
     with pytest.raises(Exception):
         spark.conf.get(key_unset)  # restored to unset, not to ""
-
-
-def test_kill_resume_recovers_from_checkpoint(spark):
-    """The C2 recovery witness (r9 VERDICT #1): a stateful twin stopped
-    mid-replay and resumed by a NEW query on the same checkpoint must
-    (a) actually resume — first resumed batchId >= 2 with input rows
-    still to process, (b) run the 100 TB-default commit path — RocksDB
-    changelog files in the state dir and rocksdb* custom metrics,
-    (c) produce the exact final state of the uninterrupted twin
-    (recovery is an execution detail, never semantics), and (d) restore
-    every scoped conf."""
-    from oem_gateway_spark.suite import REGISTRY, statestore_extra
-
-    SF = "/root/testdata/sf0.001"
-    keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-    )
-
-    def conf_or_none(k):
-        try:
-            return spark.conf.get(k)
-        except Exception:
-            return None
-
-    before = {k: conf_or_none(k) for k in keys}
-
-    resumed = REGISTRY["stream_upsert_resume"].fn(spark, SF).toPandas()
-    m = dict(statestore_extra.STATE_METRICS["stream_upsert_resume"])
-
-    # (a) the kill landed mid-replay and the new query RESUMED, not
-    # restarted: >= 2 batches committed before the stop, < 4 total, and
-    # the resumed query's first batch continues the offset log.
-    assert 2 <= m["phase1_batches"] < 4, m
-    assert m["resume_first_batch"] >= 2, m
-    assert m["resume_rows"] > 0, m
-
-    # (b) changelog checkpointing was live in the state dir, and the
-    # resumed query ran on RocksDB (custom metrics witness; the replay
-    # counter is >0 exactly when state was rebuilt from changelogs).
-    assert m["changelog_files"] > 0, m
-    assert any("rocksdb" in k.lower() for k in m["custom"]), m["custom"]
-
-    # (c) recovery is invisible in the results.
-    base = REGISTRY["stream_upsert_latest"].fn(spark, SF).toPandas()
-    r = resumed.sort_values("node").reset_index(drop=True)
-    b = base.sort_values("node").reset_index(drop=True)
-    assert r.equals(b)
-
-    # (d) no conf leaks out of the scope.
-    assert {k: conf_or_none(k) for k in keys} == before
 
 
 def test_hierarchy_fold_compacts_accumulator(spark, monkeypatch):
@@ -132,22 +81,6 @@ def test_free_local_checkpoint_removes_blocks(spark):
     _free_local_checkpoint(df)
     assert jsc.getPersistentRDDs().size() == before
     _free_local_checkpoint(spark.range(5))  # plain plan: no-op, no raise
-
-
-def test_state_metrics_keyed_per_query(spark):
-    """r9 VERDICT #5: metrics are name-keyed, so one twin's run can't
-    clobber another's witness — both entries coexist after running both."""
-    from oem_gateway_spark.suite import REGISTRY, statestore_extra
-
-    SF = "/root/testdata/sf0.001"
-    REGISTRY["stream_upsert_rocksdb"].fn(spark, SF).toPandas()
-    REGISTRY["stream_upsert_resume"].fn(spark, SF).toPandas()
-    ms = statestore_extra.STATE_METRICS
-    assert "stream_upsert_rocksdb" in ms and "stream_upsert_resume" in ms
-    # The rocksdb twin's entry is raw provider metrics; the resume twin's
-    # is the structured witness dict — distinct shapes, distinct slots.
-    assert any("rocksdb" in k.lower() for k in ms["stream_upsert_rocksdb"])
-    assert "resume_first_batch" in ms["stream_upsert_resume"]
 
 
 # --------------------------------------------------------------------------

@@ -1,7 +1,8 @@
 """Round-11 pins: ADVICE fixes (bench guard whitelist, calibration
-interpreter stamp), the calibrated-baseline self-comparison, the
-RocksDB offline state reader, and the serial streaming-half oracle's
-offset-contract witness numbers."""
+interpreter stamp), the calibrated-baseline self-comparison and the
+frame-log sink's commit protocol.  The RocksDB offline state reader and
+the serial streaming-half offset contract read their run records in
+tests/test_run_records.py."""
 
 from __future__ import annotations
 
@@ -11,51 +12,6 @@ import os
 import subprocess
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_state_reader_rocksdb_decodes_foreign_checkpoint(spark):
-    """r10 VERDICT #4: the statestore source must decode a ROCKSDB
-    checkpoint (SST + changelog files, the 100 TB-default commit path)
-    with NO session provider hint at read time, and the writer's own
-    progress must prove the provider and changelog checkpointing were
-    live.  Value/oracle proof is the full-registry replay; this pins
-    the provider-witness claims the docstring makes."""
-    from oem_gateway_spark.suite import REGISTRY
-    from oem_gateway_spark.suite.statestore_extra import (
-        _PROVIDER_KEY,
-        STATE_METRICS,
-    )
-
-    df = REGISTRY["stream_state_reader_rocksdb"].fn(spark, SF)
-    rows = df.collect()
-    assert rows, "state reader returned no rows"
-    # the scoped provider conf must not have leaked into the session
-    assert "RocksDB" not in (spark.conf.get(_PROVIDER_KEY, "") or "")
-    ms = STATE_METRICS["stream_state_reader_rocksdb"]
-    assert ms["changelog_files"] > 0, "changelog checkpointing not live"
-    assert any(k.startswith("rocksdb") for k in ms["custom"]), (
-        "writer ran without the RocksDB provider"
-    )
-    # keys cover the distinct modulus space (89), not the HDFS twin's 97
-    assert max(r.k for r in rows) < 89
-
-
-def test_serial_stream_replay_offset_contract(spark):
-    """The g_serial_stream_replay witness numbers: phase 1 must consume
-    exactly the COMPLETE lines in its prefix (the mid-line tail stays
-    unconsumed — the reference's accumulate-until-newline semantics),
-    phase 2 exactly the rest (split line once, whole), and together
-    they account for every log line with no loss or duplication."""
-    from oem_gateway_spark.suite import REGISTRY
-    from oem_gateway_spark.suite.patterns_extra import SERIAL_REPLAY_METRICS
-
-    REGISTRY["g_serial_stream_replay"].fn(spark, SF).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    m = SERIAL_REPLAY_METRICS
-    assert m["phase1_rows"] == m["phase1_complete_lines"]
-    assert m["phase1_rows"] > 0 and m["phase2_rows"] > 0
-    assert m["phase1_rows"] + m["phase2_rows"] == m["total_lines"]
 
 
 def _load_bench():

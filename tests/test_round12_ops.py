@@ -262,26 +262,6 @@ def test_framelog_stream_planner_contract(tmp_path):
     assert _line_frontier(os.path.join(lone, "shard_0.log")) == 2
 
 
-def test_framelog_stream_partitioned_phase_metrics(spark):
-    """g_framelog_stream_partitioned's docstring claims, pinned from the
-    run's own progress: both phases ingest rows (the checkpoint-resume
-    handoff is real) and the late shard's rows land in phase 2."""
-    from oem_gateway_spark.suite import REGISTRY
-    from oem_gateway_spark.suite.patterns_extra import (
-        FRAMELOG_STREAM_METRICS,
-    )
-
-    df = REGISTRY["g_framelog_stream_partitioned"].fn(spark, SF)
-    total = df.agg(F.sum("n_frames")).collect()[0][0]
-    m = FRAMELOG_STREAM_METRICS
-    assert m["n_shards"] == 8
-    assert m["phase1_rows"] > 0 and m["phase2_rows"] > 0
-    assert m["phase1_rows"] + m["phase2_rows"] == total
-    # the late shard alone is ~1/8 of the corpus; phase 2 must carry at
-    # least that much (its remainders make it strictly more)
-    assert m["phase2_rows"] > total / 8
-
-
 def test_stream_stream_full_outer_emits_both_null_sides(spark):
     """The claim that makes FULL OUTER a new eviction shape: the result
     must contain LEFT-evicted rows (purchase, NULL click) AND

@@ -301,69 +301,6 @@ def test_serial_reader_device_mode_spool_replay(tmp_path):
 SF = "/root/testdata/sf0.001"
 
 
-def test_rocksdb_full_outer_provider_live(spark):
-    """The RocksDB full-outer twin must actually run on RocksDB with
-    changelog checkpointing — not silently fall back to the default
-    provider (the result hash alone cannot tell: semantics are
-    provider-invariant by design)."""
-    from oem_gateway_spark.suite.statestore_extra import (
-        STATE_METRICS,
-        stream_stream_full_outer_rocksdb,
-    )
-
-    out = stream_stream_full_outer_rocksdb(spark, SF)
-    assert out.count() > 0
-    m = STATE_METRICS["stream_stream_full_outer_rocksdb"]
-    assert any(k.startswith("rocksdb") for k in m["custom"]), (
-        f"no rocksdb custom metrics — provider not live: {sorted(m['custom'])[:5]}"
-    )
-    assert m["changelog_files"] > 0, "changelog checkpointing not active"
-
-
-def test_rocksdb_upsert_changelog_live(spark):
-    """stream_upsert_rocksdb switched to changelog checkpointing in the
-    r13 optimization round; this pins the optimization as LIVE (changelog
-    files in the state dir), on top of the r9 pin that the provider runs
-    and the result equals the default-provider twin — the result hash
-    alone cannot tell a snapshot commit from a changelog commit."""
-    from oem_gateway_spark.suite.statestore_extra import STATE_METRICS
-    from oem_gateway_spark.suite import REGISTRY
-
-    out = REGISTRY["stream_upsert_rocksdb"].fn(spark, SF)
-    assert out.count() > 0
-    m = STATE_METRICS["stream_upsert_rocksdb"]
-    assert any(k.lower().startswith("rocksdb") for k in m), (
-        f"no rocksdb custom metrics — provider not live: {sorted(m)[:5]}"
-    )
-    assert m["changelog_files"] > 0, "changelog checkpointing not active"
-
-
-def test_join_then_window_chain_shape(spark):
-    """The chained query must execute BOTH stateful operators in ONE
-    streaming query (join + windowed agg), replay the sentinel batch,
-    and advance the watermark past all real data (the r13 pushdown-trap
-    regression pin: with the sentinel filter pushed into the scans, the
-    watermark stalls at the real data's max and the last window never
-    emits)."""
-    from oem_gateway_spark.suite.streaming_batch import (
-        JOIN_WINDOW_CHAIN_METRICS,
-        stream_join_then_window,
-    )
-
-    out = stream_join_then_window(spark, SF)
-    n = out.count()
-    assert n == 25  # sf0.001 ground truth (DuckDB join+GROUP BY)
-    m = JOIN_WINDOW_CHAIN_METRICS
-    assert m["stateful_operators"] == ["stateStoreSave", "symmetricHashJoin"], m
-    assert m["n_stateful_operators"] == 2, m
-    assert m["n_batches"] >= 3, (
-        f"expected data + sentinel + no-data batches, got {m['n_batches']}"
-    )
-    # watermark must have passed the sentinels (fails if the sentinel
-    # rows are filtered at the source by predicate pushdown)
-    assert m["final_watermark"] > "2024-02-20", m["final_watermark"]
-
-
 def test_udtf_table_partition_semantics(spark):
     """The TABLE-argument UDTF's engine contract, pinned on a tiny
     hand-built frame: one instance per PARTITION BY group, rows fed in
@@ -408,34 +345,6 @@ def test_udtf_table_partition_semantics(spark):
         ).collect()
     }
     assert got == {1: (3, 400), 2: (1, None), 3: (2, 800)}, got
-
-
-def test_window_then_window_chain_shape(spark):
-    """The window->window cascade must run BOTH aggregations as stateful
-    operators in one query, replay the sentinel batch, and flush every
-    real 2-hour window; peak_half_hour <= n with strict inequality
-    somewhere (the two-level structure is doing work)."""
-    from pyspark.sql import functions as F
-
-    from oem_gateway_spark.suite.streaming_batch import (
-        WINDOW_CHAIN_METRICS,
-        stream_window_then_window,
-    )
-
-    out = stream_window_then_window(spark, SF).cache()
-    rows = out.collect()
-    assert len(rows) > 0
-    m = WINDOW_CHAIN_METRICS
-    # two stateful aggregations, no join
-    assert m["stateful_operators"] == ["stateStoreSave"], m
-    assert m["n_stateful_operators"] == 2, m
-    assert m["n_batches"] >= 3, m
-    assert m["final_watermark"] > "2024-02-20", m["final_watermark"]
-    assert all(r["peak_half_hour"] <= r["n"] for r in rows)
-    assert any(r["peak_half_hour"] < r["n"] for r in rows), (
-        "every 2h window had a single half-hour — peak stat vacuous"
-    )
-    out.unpersist()
 
 
 def test_udtf_analyze_table_contracts(spark):
@@ -716,43 +625,6 @@ def test_jl_projection_distortion_bound(spark):
     assert pdf.cos_proj.std() > 0.05  # not collinear projections
 
 
-def test_dedup_then_window_chain_shape(spark):
-    """The third multi-stateful chain must execute BOTH operators in ONE
-    streaming query (dedup + windowed agg), actually DROP the doubled
-    deliveries (counts equal the single-delivery batch twin), and
-    advance the watermark past all real data via the sentinel batch."""
-    from pyspark.sql import functions as F
-
-    from oem_gateway_spark.catalog import normalize_event_ts
-    from oem_gateway_spark.suite.streaming_batch import (
-        DEDUP_WINDOW_CHAIN_METRICS,
-        stream_dedup_then_window,
-    )
-
-    out = stream_dedup_then_window(spark, SF)
-    got = {
-        (str(r["win_start"]), r["event_type"]): r["n"] for r in out.collect()
-    }
-    batch = normalize_event_ts(
-        spark.read.parquet(os.path.join(SF, "events.parquet"))
-    )
-    want = {
-        (str(r["win_start"]), r["event_type"]): r["n"]
-        for r in batch.groupBy(
-            F.window("ts", "1 hour").alias("win"), "event_type"
-        )
-        .agg(F.count("*").alias("n"))
-        .select(F.col("win.start").alias("win_start"), "event_type", "n")
-        .collect()
-    }
-    assert got == want  # doubled input, exactly-once output
-    m = DEDUP_WINDOW_CHAIN_METRICS
-    assert m["n_stateful_operators"] == 2, m
-    assert "dedupeWithinWatermark" in m["stateful_operators"], m
-    assert "stateStoreSave" in m["stateful_operators"], m
-    assert m["final_watermark"] > "2024-02-20", m["final_watermark"]
-
-
 def test_apply_in_arrow_grouped_map(spark):
     """applyInArrow must plan as the Arrow grouped-map node (no pandas
     boxing) and each group's normalization must span exactly [0, 1]."""
@@ -768,51 +640,6 @@ def test_apply_in_arrow_grouped_map(spark):
     )
     for r in ext.collect():
         assert r["lo"] == 0.0 and r["hi"] == 1.0, r
-
-
-def test_observe_metrics_fold(spark):
-    """observe() must deliver per-batch observation rows through the
-    progress stream, and the entry's fold of them must equal the direct
-    batch aggregate (the associativity contract monitoring relies on)."""
-    from pyspark.sql import functions as F
-
-    from oem_gateway_spark.catalog import normalize_event_ts
-    from oem_gateway_spark.suite import REGISTRY
-    from oem_gateway_spark.suite.streaming_batch import OBSERVE_BATCH_ROWS
-
-    got = REGISTRY["stream_observe_metrics"].fn(spark, SF).collect()[0]
-    assert len(OBSERVE_BATCH_ROWS) >= 1  # at least one observed batch
-    assert all(m["n_rows"] > 0 for m in OBSERVE_BATCH_ROWS)
-    batch = normalize_event_ts(
-        spark.read.parquet(os.path.join(SF, "events.parquet"))
-    )
-    want = batch.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("event_type") == "click", 1)).alias("n_clicks"),
-        F.min(F.unix_millis("ts")).alias("min_ts_ms"),
-        F.max(F.unix_millis("ts")).alias("max_ts_ms"),
-    ).collect()[0]
-    assert got["n_rows"] == want["n_rows"] > 0
-    assert got["n_clicks"] == want["n_clicks"] > 0
-    assert got["n_high"] > 0
-    assert got["min_ts_ms"] == want["min_ts_ms"]
-    assert got["max_ts_ms"] == want["max_ts_ms"]
-
-
-def test_pandas_udf_iter_init_amortized(spark):
-    """SCALAR_ITER's contract IS the amortization: the 'model load' must
-    run once per PARTITION (accumulator count == partitions touched),
-    never once per row or per Arrow batch."""
-    import oem_gateway_spark.suite.udf_surface as U
-
-    df = U.u_pandas_udf_iter(spark, SF)
-    rows = df.collect()
-    n_rows = sum(r["n"] for r in rows)
-    inits = U.ITER_UDF_INITS.value
-    assert 0 < inits <= 32, inits  # bounded by cores/partitions
-    assert inits < n_rows  # NOT per-row
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
 
 
 def test_pandas_udf_window_frames(spark):

@@ -281,55 +281,3 @@ def test_ngram_jaccard_persists_gram_frame(spark):
         release_caches(df)
 
 
-def test_full_outer_rocksdb_join_state_format_v3(spark):
-    """The RocksDB join twin runs join.stateFormatVersion=3 (one virtual-
-    column-family store per partition instead of four named stores —
-    r13 VERDICT #4, interleaved A/B 1.35x median).  v2's layout puts the
-    four named store dirs (left/right x keyToNumValues/keyWithIndexTo-
-    Value) under each partition dir; v3 keeps the single store's files
-    (SSTs/, changelogs) directly there — so the named-dir set is the
-    format's on-disk fingerprint.  RocksDB liveness itself stays pinned
-    by test_round13_ops.test_rocksdb_full_outer_provider_live."""
-    from oem_gateway_spark.suite.statestore_extra import (
-        STATE_METRICS,
-        stream_stream_full_outer_rocksdb,
-    )
-
-    out = stream_stream_full_outer_rocksdb(spark, SF)
-    assert out.count() > 0
-    m = STATE_METRICS["stream_stream_full_outer_rocksdb"]
-    v2_dirs = {
-        f"{side}-{store}"
-        for side in ("left", "right")
-        for store in ("keyToNumValues", "keyWithIndexToValue")
-    }
-    assert not v2_dirs & set(m["state_store_dirs"]), (
-        f"expected v3 single-store layout, got {m['state_store_dirs']}"
-    )
-    assert m["changelog_files"] >= 1, m
-
-
-def test_streaming_checkpoint_checksums_disabled(spark):
-    """Spark 4.1 writes a NON-hidden '<file>.crc' sidecar per checkpoint
-    file when checkpoint.fileChecksum is enabled — doubling small-file
-    churn per micro-batch commit for integrity the checkpoint store
-    already provides (r14 session.py; interleaved A/B 1.14-1.44x on four
-    twins).  Pin the engine default AND the on-disk effect: the RocksDB
-    join twin's checkpoint must hold zero Spark-level sidecars (Python
-    glob skips Hadoop's dot-hidden LocalFS CRCs, so the count isolates
-    the Spark feature)."""
-    from oem_gateway_spark.session import DEFAULT_CONF
-    from oem_gateway_spark.suite.statestore_extra import STATE_METRICS
-
-    key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    assert DEFAULT_CONF[key] == "false"
-    assert spark.conf.get(key) == "false"
-    m = STATE_METRICS.get("stream_stream_full_outer_rocksdb")
-    if m is None:  # run order independence: build the witness ourselves
-        from oem_gateway_spark.suite.statestore_extra import (
-            stream_stream_full_outer_rocksdb,
-        )
-
-        stream_stream_full_outer_rocksdb(spark, SF).count()
-        m = STATE_METRICS["stream_stream_full_outer_rocksdb"]
-    assert m["spark_checksum_files"] == 0, m

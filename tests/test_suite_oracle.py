@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_ORACLE
 from tests.oracle_harness import compare
 
 
@@ -16,24 +15,23 @@ def _registry():
 
 
 @pytest.mark.parametrize("name", sorted(_registry().keys()))
-def test_query_matches_oracle(name, spark, duck):
+def test_query_matches_oracle(name, runs, duck):
     from oem_gateway_spark.plans.explain import shared_python_tables
 
     spec = _registry()[name]
-    df = spec.fn(spark, SF_ORACLE)
+    rec = runs(name)
     # Mechanical fresh-load()-per-plan enforcement (r11 VERDICT #2): a
     # registry query whose plan references one Python-source load()
     # twice would return silently wrong rows (measured scan-state
     # cross-contamination, framelog_source.py:57) — fail it loudly here
     # before the value compare can green-wash it.
-    dups = shared_python_tables(df)
+    dups = shared_python_tables(rec.df)
     assert not dups, (
         f"{name}: plan references a Python DataSource relation more than "
         f"once ({dups}); build a FRESH load() per reference "
         f"(sources/framelog_source.py fresh-load contract)"
     )
-    sdf = df.toPandas()
-    assert len(sdf) >= 0
+    sdf = rec.result
     if spec.oracle is None:
         assert len(sdf) > 0, f"{name}: rows-only query returned empty"
         return

@@ -1,13 +1,13 @@
 #!/usr/bin/env python
-"""Round-13 optimization harness: isolated per-query measurement + plan
-capture (guide §1: measure first, noop sink, labelled jobs).
+"""Optimization harness: isolated per-query measurement + plan capture
+(measure first, noop sink, labelled jobs).
 
-    python tools/profile_r13.py --queries q_reachability,d_pagerank \
+    python tools/profile_queries.py --queries q_reachability,d_pagerank \
         [--sf /root/testdata/sf0.1] [--runs 3] [--plans-tag before]
 
-For each query: capture .explain("formatted") to plans/r13/<name>_<tag>.txt
-(the judge-checkable artifact), then time ``runs`` noop-sink executions and
-report each run plus the min.  Prints one summary line per query:
+For each query: capture .explain("formatted") to
+plans/profile/<name>_<tag>.txt, then time ``runs`` noop-sink executions
+and report each run plus the min.  Prints one summary line per query:
 
     PROFILE <name> min=<s> runs=[..]
 
@@ -47,7 +47,7 @@ def main() -> None:
     if unknown:
         sys.exit(f"not in registry: {sorted(unknown)}")
 
-    spark = get_spark(app_name="profile-r13")
+    spark = get_spark(app_name="profile")
     spark.sparkContext.setLogLevel("ERROR")
     # Warmups: batch codegen, streaming machinery, RocksDB JNI (same as
     # tools/sweep.py — without them the first query pays the cold start).
@@ -62,14 +62,14 @@ def main() -> None:
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r13",
+        "profile",
     )
     results: dict[str, float] = {}
     for name in names:
         fn = REGISTRY[name].fn
         runs: list[float] = []
         for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r13:{name}:run{i}")
+            spark.sparkContext.setJobDescription(f"profile:{name}:run{i}")
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()

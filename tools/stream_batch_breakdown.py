@@ -1,19 +1,16 @@
 #!/usr/bin/env python
-"""Per-micro-batch durationMs breakdown for streaming twins (r14 §1).
+"""Per-micro-batch durationMs breakdown for streaming twins.
 
     python tools/stream_batch_breakdown.py --queries stream_join_then_window
 
-Monkeypatches streaming_batch._run_to_table / the statestore twins'
-progress capture is not needed: we re-run the twin and read
-q.recentProgress via a wrapper around DataStreamWriter.start — instead,
-simplest robust route: run the registry fn (it materializes internally),
-then read the LAST started query's recentProgress off the session.
+Runs each query through ``registry.run`` and prints, for every streaming
+query its build ran (``RunRecord.streams``), the batch count, the most
+stateful operators in one batch, and the summed durationMs phases.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 from collections import Counter
@@ -27,51 +24,23 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from pyspark.sql.streaming import query as sq_mod
-
     from oem_gateway_spark import get_spark
-    from oem_gateway_spark.operators.dedup import release_caches
-    from oem_gateway_spark.suite import REGISTRY
+    from oem_gateway_spark.suite.registry import run
 
     spark = get_spark(app_name="stream-breakdown")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # capture every progress dict of every query run in this session
-    captured: list[dict] = []
-    orig_await = sq_mod.StreamingQuery.awaitTermination
-
-    def patched_await(self, timeout=None):
-        try:
-            return orig_await(self, timeout)
-        finally:
-            try:
-                progs = [
-                    p if isinstance(p, dict) else json.loads(p)
-                    for p in (self.recentProgress or [])
-                ]
-                captured.append({"progress": progs})
-            except Exception:
-                pass
-
-    sq_mod.StreamingQuery.awaitTermination = patched_await
-
     for name in [n.strip() for n in args.queries.split(",") if n.strip()]:
-        captured.clear()
-        df = REGISTRY[name].fn(spark, args.sf)
-        df.write.format("noop").mode("overwrite").save()
-        release_caches(df)
-        for qi, cap in enumerate(captured):
-            progs = cap["progress"]
+        for qi, digest in enumerate(run(name, spark, args.sf).streams):
+            progs = digest["progress"]
             durs: Counter = Counter()
-            n_ops = 0
             for p in progs:
-                for k, v in (p.get("durationMs") or {}).items():
-                    durs[k] += v
-                n_ops = max(n_ops, len(p.get("stateOperators") or []))
+                durs.update(p.get("durationMs") or {})
             total = sum(p.get("batchDuration", 0) for p in progs)
             print(
-                f"BREAKDOWN {name}[q{qi}] batches={len(progs)} "
-                f"stateOps={n_ops} batchDurationSum={total} "
+                f"BREAKDOWN {name}[q{qi}] batches={digest['n_batches']} "
+                f"stateOps={digest['n_stateful_operators']} "
+                f"batchDurationSum={total} "
                 f"durationMs={dict(durs.most_common())}",
                 flush=True,
             )
