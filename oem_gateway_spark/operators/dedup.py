@@ -44,6 +44,11 @@ def _own_cache(result: DataFrame, *cached: DataFrame) -> DataFrame:
     return result
 
 
+def _inherit_caches(result: DataFrame, source: DataFrame) -> DataFrame:
+    """Make ``result``, derived from ``source``, own what ``source`` owns."""
+    return _own_cache(result, *getattr(source, "_owned_caches", ()))
+
+
 def release_caches(df: DataFrame) -> None:
     """Unpersist every cache an operator attached to ``df`` (no-op for
     DataFrames without owned caches).  Call after the action completes."""

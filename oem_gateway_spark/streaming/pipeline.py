@@ -26,7 +26,10 @@ Scale: one query per sink keeps failure domains independent (a slow sink
 never backpressures another — the reference shared one thread for all).
 One query feeding every sink from one ``foreachBatch`` was measured on the
 benchmark's ``gateway_live`` workload (4 cores) and is slower:
-``queries_per_s`` 1.27-1.32 against 2.41 for per-sink queries.  Several
+``queries_per_s`` 1.27-1.32 against 2.41 for per-sink queries.  Both
+figures predate one-task socket batches and the FileSystem-based
+checkpoint manager (``session.py``), which cut the per-batch cost; the
+comparison was not rerun since.  Several
 actions on one ``foreachBatch`` frame each re-read the source
 (``numInputRows`` 200 for 100 rows), and persisting the frame to avoid
 that raised p50 ack latency to 1,321 ms.

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from oem_gateway_spark.catalog import load_table
 from oem_gateway_spark.functions import hashing as H
+from oem_gateway_spark.operators.dedup import _inherit_caches
 from oem_gateway_spark.suite.registry import query, record
 
 _DAY_MS = 86_400_000
@@ -508,12 +509,13 @@ def _upsert_final_state(log: DataFrame) -> DataFrame:
     latest = F.max_by(
         F.struct("last_event_id", "last_ts_ms", "last_value"), "n_updates"
     )
-    return log.groupBy("node").agg(
+    final = log.groupBy("node").agg(
         latest.getField("last_event_id").alias("last_event_id"),
         latest.getField("last_ts_ms").alias("last_ts_ms"),
         latest.getField("last_value").alias("last_value"),
         F.max("n_updates").alias("n_updates"),
     )
+    return _inherit_caches(final, log)
 
 
 @query("stream_upsert_latest", oracle=UPSERT_LWW_ORACLE)

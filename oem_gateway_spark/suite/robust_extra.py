@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oem_gateway_spark.catalog import load_table
+from oem_gateway_spark.operators.dedup import _inherit_caches
 from oem_gateway_spark.suite.registry import query
 from oem_gateway_spark.suite.streaming_batch import (
     TUMBLING_ORACLE,
@@ -126,8 +127,9 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_event_ts(stream)
     result = ST.tumbling_counts(stream, watermark="2 hours")
     table = _run_to_table(result, mode="append", shuffle_partitions=8)
-    return table.filter(
-        ~F.col("event_type").isin("__sentinel__", "__filler__")
+    return _inherit_caches(
+        table.filter(~F.col("event_type").isin("__sentinel__", "__filler__")),
+        table,
     )
 
 

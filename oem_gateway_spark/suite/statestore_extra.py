@@ -42,12 +42,14 @@ from itertools import count
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oem_gateway_spark.operators.dedup import _inherit_caches
 from oem_gateway_spark.suite.patterns_extra import (
     UPSERT_LWW_ORACLE,
     _upsert_changelog_stream,
     _upsert_final_state,
 )
 from oem_gateway_spark.suite.registry import query, record
+from oem_gateway_spark.suite.streaming_batch import memory_table
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -145,7 +147,7 @@ def stream_upsert_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         record(stream=q, changelog_files=_changelog_files(ckpt))
-        log = spark.table(name)
+        log = memory_table(spark, name)
         # r13 ADVICE: the count above is the only reader of this
         # checkpoint (the memory sink holds the results), and the
         # stale-scratch sweep only reclaims dirs whose OWNER pid died —
@@ -625,5 +627,5 @@ def stream_stream_full_outer_rocksdb(
                 glob.glob(os.path.join(ckpt, "**", "*.crc"), recursive=True)
             ),
         )
-        table = spark.table(name)
-    return table.filter(F.col("user_id") >= 0)
+        table = memory_table(spark, name)
+    return _inherit_caches(table.filter(F.col("user_id") >= 0), table)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oem_gateway_spark.catalog import load_table
+from oem_gateway_spark.operators.dedup import _inherit_caches, _own_cache
 from oem_gateway_spark.streaming import state as ST
 from oem_gateway_spark.suite.registry import query, record
 
@@ -228,13 +229,32 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(stream)
 
 
+class _MemoryTable:
+    """A memory sink's table as an owned cache: ``release_caches`` calls
+    ``unpersist``, which drops the table from the session catalog."""
+
+    def __init__(self, spark: SparkSession, name: str) -> None:
+        self.spark, self.name = spark, name
+
+    def unpersist(self) -> None:
+        self.spark.catalog.dropTempView(self.name)
+
+
+def memory_table(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink table ``name``, read by a frame that owns it, so
+    releasing the frame (or one derived with ``_inherit_caches``) drops
+    the table instead of leaving it, and the sink's rows, for the rest
+    of the session."""
+    return _own_cache(spark.table(name), _MemoryTable(spark, name))
+
+
 def _run_to_table(
     result: DataFrame,
     mode: str,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink; return the materialized table.
+    memory sink; return the materialized table (``memory_table``).
 
     ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
     this one streaming query (set before start, restored after
@@ -268,7 +288,7 @@ def _run_to_table(
     finally:
         if prev is not None:
             spark.conf.set(key, prev)
-    return spark.table(name)
+    return memory_table(spark, name)
 
 
 # ------------------------------------------------- batch-mode window family
@@ -806,7 +826,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "purchase_id", "click_id"
     )
     table = _run_to_table(joined, mode="append", shuffle_partitions=8)
-    return table.filter(F.col("user_id") >= 0)
+    return _inherit_caches(table.filter(F.col("user_id") >= 0), table)
 
 
 FULL_OUTER_JOIN_ORACLE = """
@@ -846,7 +866,7 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
         "click_id",
     )
     table = _run_to_table(joined, mode="append", shuffle_partitions=8)
-    return table.filter(F.col("user_id") >= 0)
+    return _inherit_caches(table.filter(F.col("user_id") >= 0), table)
 
 
 @query(
@@ -1022,14 +1042,15 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     table = _run_to_table(per_user, mode="append", shuffle_partitions=8)
-    return (
+    return _inherit_caches(
         table.filter(F.col("user_id") >= 0)  # see PUSHDOWN TRAP above
         .groupBy("win_start")
         .agg(
             F.sum("n_m").alias("n_matches"),
             F.count("*").alias("n_users"),
             F.sum("sum_c").alias("sum_click_id"),
-        )
+        ),
+        table,
     )
 
 
@@ -1122,7 +1143,9 @@ def stream_window_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("ts").alias("mx"))
         .collect()[0]["mx"]
     )
-    return table.filter(F.col("win_start") <= F.lit(max_real_ts))
+    return _inherit_caches(
+        table.filter(F.col("win_start") <= F.lit(max_real_ts)), table
+    )
 
 
 @query(
@@ -1204,7 +1227,9 @@ def stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("ts").alias("mx"))
         .collect()[0]["mx"]
     )
-    return table.filter(F.col("win_start") <= F.lit(max_real_ts))
+    return _inherit_caches(
+        table.filter(F.col("win_start") <= F.lit(max_real_ts)), table
+    )
 
 
 @query(

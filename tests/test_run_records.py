@@ -62,6 +62,23 @@ def test_run_records_are_per_run_and_left_inactive_after_failure(
     assert seen[0].facts == {"before_raise": 1}
 
 
+@pytest.mark.parametrize(
+    "name", ["stream_join_then_window", "stream_upsert_rocksdb"]
+)
+def test_run_drops_the_memory_sink_table(spark, name):
+    """A memory-sink builder's returned frame owns the sink's table, so
+    ``run`` (through ``release_caches``) drops it: repeated runs leave
+    the session's temporary-table count unchanged."""
+
+    def temp_tables() -> int:
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before = temp_tables()
+    for _ in range(3):
+        assert len(run(name, spark, SF).result) > 0
+        assert temp_tables() == before
+
+
 def test_rocksdb_provider_witnessed_and_conf_restored(spark, runs):
     """stream_upsert_rocksdb must (a) actually run on the RocksDB state
     store — rocksdb* custom metrics in the query progress are the

@@ -9,7 +9,10 @@ Alternates baseline (conf unset/previous value) and variant (conf set) runs
 of each query IN ONE SESSION, A-B-B-A order per round pair, so host drift
 hits both variants symmetrically — the r13 lesson that raw walls across
 runs are not comparable on this box.  Streaming confs are read at stream
-START, so session-level set/restore scopes each run exactly.
+START, so session-level set/restore scopes each run exactly.  Each run
+goes through ``registry.run`` (build, ``toPandas``, release), and the
+line per query also prints the micro-batch count of every stream each
+timed run started, from its run record.
 """
 
 from __future__ import annotations
@@ -33,8 +36,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from oem_gateway_spark import get_spark
-    from oem_gateway_spark.operators.dedup import release_caches
-    from oem_gateway_spark.suite import REGISTRY
+    from oem_gateway_spark.suite import registry
 
     confs = dict(c.split("=", 1) for c in args.conf)
     names = [n.strip() for n in args.queries.split(",") if n.strip()]
@@ -57,32 +59,34 @@ def main() -> None:
             else:
                 spark.conf.set(k, prev[k])
 
-    def run(name: str) -> float:
-        fn = REGISTRY[name].fn
+    def run(name: str) -> tuple[float, list[int]]:
         t0 = time.perf_counter()
-        df = fn(spark, args.sf)
-        df.write.format("noop").mode("overwrite").save()
+        rec = registry.run(name, spark, args.sf)
         dt = time.perf_counter() - t0
-        release_caches(df)
-        return round(dt, 3)
+        return round(dt, 3), [s["n_batches"] for s in rec.streams]
 
     for name in names:
         # warmup (uncounted, baseline conf)
         set_variant(False)
         run(name)
         res: dict[str, list[float]] = {"base": [], "variant": []}
+        batches: dict[str, set[tuple[int, ...]]] = {"base": set(), "variant": set()}
         for i in range(args.rounds):
             order = ("base", "variant") if i % 2 == 0 else ("variant", "base")
             for which in order:
                 set_variant(which == "variant")
                 spark.sparkContext.setJobDescription(f"ab:{name}:{which}:{i}")
-                res[which].append(run(name))
+                dt, n = run(name)
+                res[which].append(dt)
+                batches[which].add(tuple(n))
         set_variant(False)
         b, v = res["base"], res["variant"]
         print(
             f"AB {name} base={b} min={min(b)} med={statistics.median(b)} | "
             f"variant={v} min={min(v)} med={statistics.median(v)} | "
-            f"med_speedup={statistics.median(b) / statistics.median(v):.3f}",
+            f"med_speedup={statistics.median(b) / statistics.median(v):.3f} | "
+            f"batches base={sorted(batches['base'])} "
+            f"variant={sorted(batches['variant'])}",
             flush=True,
         )
 
